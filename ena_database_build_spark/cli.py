@@ -5,7 +5,7 @@ The reference CLI takes ENA directory roots, a Windows-INI database
 config for the idmapping MySQL table, and an output directory, then
 schedules Dask tasks.  Here the same surface wires the Spark lineage:
 
-    read_embl_lines -> build_all -> write_ena_tab
+    read_embl_lines -> build_all -> write_ena_tab (+ dead letters)
 
 Scheduler knobs (``--scheduler-file``/``--n-workers``) become the Spark
 master URL and shuffle-partition count; ``--local-scratch`` maps to
@@ -107,12 +107,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         default=None,
         help="also write the dead-letter channels (rejected records/blocks)",
     )
-    parser.add_argument(
-        "--broadcast-mapping",
-        action="store_true",
-        help="force-broadcast the idmapping relation (only when it is "
-        "known small; default lets AQE decide)",
-    )
     args = parser.parse_args(argv)
     if args.db_config and not args.db_name:
         parser.error("--db-name is required with --db-config")
@@ -154,23 +148,30 @@ def main(argv: list[str] | None = None) -> None:
         url, options = jdbc_url_from_ini(args.db_config, args.db_name)
         idmapping = read_idmapping_jdbc(spark, url, args.db_table, **options)
 
-    result = build_all(lines, idmapping, broadcast_mapping=args.broadcast_mapping)
-    write_ena_tab(
-        result.ena_tab,
-        args.output_dir,
-        partition_by_source_dir=args.partition_by_source_dir,
-        single_file=args.single_file,
-    )
+    result = build_all(lines, idmapping)
     if args.rejects_dir:
-        # dead-letter channels keep the source file column (unlike the
-        # ena table, where it is provenance-only)
-        for name, df in [
-            ("records", result.rejected_records),
-            ("blocks", result.rejected_blocks),
-        ]:
-            df.write.mode("overwrite").option("sep", "\t").option(
-                "header", "false"
-            ).csv(f"{args.rejects_dir}/{name}")
+        # the table and both dead-letter channels read one segmented
+        # line table: compute it once for the three writes
+        result.segmented.persist()
+    try:
+        write_ena_tab(
+            result.ena_tab,
+            args.output_dir,
+            partition_by_source_dir=args.partition_by_source_dir,
+            single_file=args.single_file,
+        )
+        if args.rejects_dir:
+            # dead-letter channels keep the source file column (unlike
+            # the ena table, where it is provenance-only)
+            for name, df in [
+                ("records", result.rejected_records),
+                ("blocks", result.rejected_blocks),
+            ]:
+                df.write.mode("overwrite").option("sep", "\t").option(
+                    "header", "false"
+                ).csv(f"{args.rejects_dir}/{name}")
+    finally:
+        result.segmented.unpersist()  # a no-op when nothing was persisted
 
 
 if __name__ == "__main__":

@@ -3179,7 +3179,8 @@ def q_table_profile(spark, sf_dir):
     single-box asymptote is a parallelism budget: the same plan keeps
     shrinking with executors where the oracle has already stopped.
     Plan-shape alternatives were measured and REJECTED at ~sf10
-    (tools/profile_forms_probe.py): per-column union branches with
+    (tools/profile_forms_probe.py, a one-off that git history keeps):
+    per-column union branches with
     Spark's single-distinct rewrite (3.38 s — pruned scans don't
     repay 4 exchanges) and flat (non-struct) group keys (2.76 s —
     a tie); the shipped posexplode single-scan form (2.78 s) stands.
@@ -8797,7 +8798,9 @@ FROM db JOIN lr USING (b) GROUP BY doc_id
 # tools/check_catalog.py for the full-catalog local check.
 #
 # Rotation state and schedule (round-4 VERDICT "Next round" #1 —
-# never-checked queries outrank banked-but-stale ones):
+# never-checked queries outrank banked-but-stale ones).  The
+# tools/rotate_catalog_r*.py scripts named below were one-shots; they
+# are removed and git history keeps them:
 #   round 5 (THIS ordering, shipped exactly as the round-4 schedule
 #     specified): the 10 queries held back from round 4
 #     (daily_spine .. window_distinct_users), then the consolidated

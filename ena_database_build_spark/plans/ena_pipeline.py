@@ -32,6 +32,7 @@ from ena_database_build_spark.functions.locations import (
     resolved_span,
 )
 from ena_database_build_spark.operators import segmentation as S
+from ena_database_build_spark.sources.idmapping import normalize_idmapping
 
 ENA_TAB_COLUMNS = [
     "ena_id",
@@ -46,51 +47,41 @@ ENA_TAB_COLUMNS = [
 
 @dataclass
 class EnaBuildResult:
-    """All materialized channels of the pipeline (each still lazy)."""
+    """The pipeline's output channels, each still lazy, all derived from
+    the one ``segmented`` line table (persist it before running several
+    of them as separate actions)."""
 
-    records: DataFrame
-    loci: DataFrame
+    segmented: DataFrame
     ena_tab: DataFrame
     rejected_records: DataFrame
     rejected_blocks: DataFrame
 
 
-def parse_records(embl_lines: DataFrame) -> DataFrame:
-    segmented = S.segment_lines(embl_lines)
-    return S.extract_records(segmented)
+def _extract(segmented: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """G1/G2 close-out: per-record headers and CDS blocks with their
+    location string (P7).
 
-
-def parse_loci(
-    embl_lines: DataFrame,
-    segmented: DataFrame | None = None,
-    broadcast_records: bool = False,
-) -> DataFrame:
-    """records+blocks -> loci with resolved spans and per-locus id sets.
-
-    Pass a pre-computed (ideally persisted) ``segmented`` DataFrame to
-    avoid re-running ingest + windowing for each consumer branch.
+    Both branches read the same ``segmented`` table: a records path that
+    re-derived ``record_idx`` from its own ID/OC line filter measured
+    2-5x slower end-to-end, because it forfeits subtree reuse with the
+    blocks branch.
     """
-    if segmented is None:
-        segmented = S.segment_lines(embl_lines)
-    # NB: a "light" records path that re-derived record_idx from a
-    # pre-filtered ID/OC line set measured 2-5x SLOWER end-to-end than
-    # sharing the segmented lineage (it forfeits subtree reuse with the
-    # blocks branch); keep both branches on `segmented`.
     records = S.extract_records(segmented)
-    blocks = S.extract_cds_blocks(segmented)
+    blocks = S.extract_cds_blocks(segmented).withColumn(
+        "loc_str", E.cds_location_string(F.col("loc_parts"))
+    )
+    return records, blocks
 
+
+def _join_loci(records: DataFrame, blocks: DataFrame) -> DataFrame:
+    """records+blocks -> loci with resolved spans and per-locus id sets."""
     live_records = records.where(
         F.col("reject_reason").isNull() & (F.col("ena_id") != "")
     )
-
-    parsed = blocks.withColumn(
-        "loc_str", E.cds_location_string(F.col("loc_parts"))
-    ).withColumn("loc_ranges", location_ranges(F.col("loc_str")))
-
     # F7: blocks with no x..y range are dropped *before* ordinal
     # assignment (quirk §2.10.4) and contribute no xrefs at all.
-    good = parsed.where(F.size("loc_ranges") > 0)
-    numbered = S.number_loci(good)
+    parsed = blocks.withColumn("loc_ranges", location_ranges(F.col("loc_str")))
+    numbered = S.number_loci(parsed.where(F.size("loc_ranges") > 0))
 
     # A1: per-locus xref sets were already collect_set'd map-side in
     # extract_cds_blocks.
@@ -106,18 +97,10 @@ def parse_loci(
         "protein_ids",
     )
 
-    # Record join is 1:N on (file, record_idx).  Default
-    # broadcast_records=False: NO hint — a hint is always honored, and at
-    # corpus scale the record-header relation (one row per chromosome)
-    # can reach GBs; AQE decides from runtime sizes (broadcast when
-    # small, shuffle join on the existing file-prefixed partitioning
-    # otherwise).  Pass True to force the hint for small corpora where
-    # skipping AQE's size probe measurably helps; build_ena_tab /
-    # build_all plumb this through.
-    join_records = (
-        F.broadcast(live_records) if broadcast_records else live_records
-    )
-    joined = with_ids.join(join_records, ["file", "record_idx"])
+    # Record join is 1:N on (file, record_idx), hint-free: at corpus
+    # scale the record-header relation (one row per chromosome) can
+    # reach GBs, so AQE decides from runtime sizes.
+    joined = with_ids.join(live_records, ["file", "record_idx"])
 
     return joined.select(
         "file",
@@ -147,14 +130,26 @@ def parse_loci(
     )
 
 
-def resolve_uniprot_ids(
-    loci: DataFrame, idmapping: DataFrame, broadcast_mapping: bool = False
+def parse_loci(
+    embl_lines: DataFrame, segmented: DataFrame | None = None
 ) -> DataFrame:
+    """records+blocks -> loci with resolved spans and per-locus id sets.
+
+    Pass ``segmented`` to build on an existing ``segment_lines`` result
+    instead of re-segmenting ``embl_lines``.
+    """
+    if segmented is None:
+        segmented = S.segment_lines(embl_lines)
+    return _join_loci(*_extract(segmented))
+
+
+def resolve_uniprot_ids(loci: DataFrame, idmapping: DataFrame) -> DataFrame:
     """J1 + J2 + J3: reverse-map protein ids, falling back to parsed ids.
 
-    * J1 — explode the per-locus ``protein_ids`` set and inner-join the
+    * J1 — explode the per-locus ``protein_ids`` set and left-join the
       deduplicated idmapping on ``foreign_id`` (replaces the per-record
-      ``IN (...)`` round-trip, mysql_database.py:92-93).
+      ``IN (...)`` round-trip, mysql_database.py:92-93).  The planner
+      and AQE pick broadcast or shuffle join from the mapping's size.
     * J2 — the anti-join/no-match bookkeeping vanishes: unmatched ids
       simply produce no join rows (the reference's ``not in no_match``
       check is provably redundant — SURVEY.md §2.6 J2).
@@ -164,9 +159,7 @@ def resolve_uniprot_ids(
       it falls back to its parsed ``uniprot_ids``; loci with neither emit
       nothing.
     """
-    mapping = idmapping.dropDuplicates(["foreign_id", "uniprot_id"])
-    if broadcast_mapping:
-        mapping = F.broadcast(mapping)
+    mapping = normalize_idmapping(idmapping)
 
     locus_key = ["file", "record_idx", "locus_num"]
     other_cols = [c for c in loci.columns if c not in locus_key]
@@ -199,39 +192,6 @@ def resolve_uniprot_ids(
     return resolved.where(F.size("resolved_uniprot_ids") > 0)
 
 
-def build_ena_tab(
-    embl_lines: DataFrame,
-    idmapping: DataFrame,
-    broadcast_mapping: bool = False,
-    broadcast_records: bool = False,
-    persist_intermediates: bool = False,
-) -> DataFrame:
-    """Full pipeline: ordered lines + idmapping -> the 7-column table.
-
-    Output grain: one row per (locus, resolved uniprot id list element);
-    duplicates across overlapping input files are preserved (quirk
-    §2.10.8 — the reference never dedups globally).
-
-    ``persist_intermediates`` caches the segmented lines and the loci.
-    Default OFF: the multi-consumer branches (records/blocks, the
-    explode/join sides of J1/J3) share identical exchange subplans that
-    Spark's ReuseExchange already dedups within the single write job,
-    and measurements show caching the 10^6-row line table costs more
-    (memory pressure + materialization) than it saves.  Turn on only
-    when running several separate actions over one small corpus.
-    """
-    segmented = S.segment_lines(embl_lines)
-    if persist_intermediates:
-        segmented = segmented.persist()
-    loci = parse_loci(
-        embl_lines, segmented=segmented, broadcast_records=broadcast_records
-    )
-    if persist_intermediates:
-        loci = loci.persist()
-    resolved = resolve_uniprot_ids(loci, idmapping, broadcast_mapping)
-    return _project_ena_tab(resolved)
-
-
 def _project_ena_tab(resolved: DataFrame) -> DataFrame:
     """O1+O2: one output row per resolved uniprot id, reference column
     order (parse_embl.py:255)."""
@@ -247,44 +207,37 @@ def _project_ena_tab(resolved: DataFrame) -> DataFrame:
     ).select("file", *ENA_TAB_COLUMNS)
 
 
-def build_all(
-    embl_lines: DataFrame,
-    idmapping: DataFrame,
-    broadcast_mapping: bool = False,
-    broadcast_records: bool = False,
-) -> EnaBuildResult:
-    """Run the pipeline and expose dead-letter channels (SURVEY.md §4.3:
-    the reference print-and-skips malformed rows; we surface them as
-    filterable DataFrames instead).
+def build_all(embl_lines: DataFrame, idmapping: DataFrame) -> EnaBuildResult:
+    """The whole lineage, segmented and extracted once: ``ena_tab`` and
+    the dead-letter channels (SURVEY.md §4.3: the reference
+    print-and-skips malformed rows; we surface them as filterable
+    DataFrames instead) all read the same records and blocks.
 
-    The segmented line table is persisted because the result's channels
-    are consumed as separate actions; call
-    ``result.records.sparkSession.catalog.clearCache()`` (or unpersist)
-    when done with a long-lived session.
+    ``ena_tab`` grain: one row per (locus, resolved uniprot id list
+    element); duplicates across overlapping input files are preserved
+    (quirk §2.10.8 — the reference never dedups globally).
     """
-    segmented = S.segment_lines(embl_lines).persist()
-    records = S.extract_records(segmented)
-    loci = parse_loci(
-        embl_lines, segmented=segmented, broadcast_records=broadcast_records
+    segmented = S.segment_lines(embl_lines)
+    records, blocks = _extract(segmented)
+    ena_tab = _project_ena_tab(
+        resolve_uniprot_ids(_join_loci(records, blocks), idmapping)
     )
-    resolved = resolve_uniprot_ids(loci, idmapping, broadcast_mapping)
-    ena_tab = _project_ena_tab(resolved)
-
     rejected_records = records.where(F.col("reject_reason").isNotNull()).select(
         "file", "record_idx", "reject_reason"
     )
-    blocks = S.extract_cds_blocks(segmented)
-    rejected_blocks = (
-        blocks.withColumn("loc_str", E.cds_location_string(F.col("loc_parts")))
-        # dead-letter gate only asks "no x..y range at all" — the
-        # pattern-match predicate, not the full parse (locations.has_range
-        # is pinned equivalent to size(location_ranges(s)) == 0 negated)
-        .where(~has_range(F.col("loc_str")))
-        .select(
-            "file",
-            "record_idx",
-            "block_idx",
-            F.lit("unparseable_cds_location").alias("reject_reason"),
-        )
+    # the dead-letter gate only asks "no x..y range at all" — the
+    # pattern-match predicate, not the full parse (locations.has_range
+    # is pinned equivalent to size(location_ranges(s)) == 0 negated)
+    rejected_blocks = blocks.where(~has_range(F.col("loc_str"))).select(
+        "file",
+        "record_idx",
+        "block_idx",
+        F.lit("unparseable_cds_location").alias("reject_reason"),
     )
-    return EnaBuildResult(records, loci, ena_tab, rejected_records, rejected_blocks)
+    return EnaBuildResult(segmented, ena_tab, rejected_records, rejected_blocks)
+
+
+def build_ena_tab(embl_lines: DataFrame, idmapping: DataFrame) -> DataFrame:
+    """Full pipeline: ordered lines + idmapping -> the 7-column table
+    (plus ``file``); see ``build_all``."""
+    return build_all(embl_lines, idmapping).ena_tab

@@ -29,7 +29,6 @@ def read_embl_lines(
     spark: SparkSession,
     paths: list[str] | str,
     apply_division_filter: bool = True,
-    target_partitions: int | None = None,
     strategy: str = "wholetext",
 ) -> DataFrame:
     """Read EMBL flat files under ``paths`` into the ordered-line schema
@@ -37,7 +36,9 @@ def read_embl_lines(
 
     ``apply_division_filter`` reproduces F1: in ``sequence/`` trees only
     ``_(ENV|PRO|FUN|PHG)_`` division files are kept
-    (ena_build/dask_tasks.py:78-85).
+    (ena_build/dask_tasks.py:78-85).  The predicate is on the scan's
+    ``_metadata.file_path``, which Spark evaluates against the file
+    listing, so a dropped file is never opened.
 
     ``strategy``:
 
@@ -62,24 +63,23 @@ def read_embl_lines(
     # not picked up by the text source in Spark 4.x.  The *.dat.gz glob
     # is also what makes line mode's ordering proof hold (gzip is
     # non-splittable, so one file = one read split); see below.
-    reader = (
+    raw = (
         spark.read.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", EMBL_GLOB)
+        .text(paths, wholetext=strategy == "wholetext")
     )
+    if apply_division_filter:
+        raw = raw.where(
+            E.matches_sequence_division(F.col("_metadata.file_path"))
+        )
+    # `file` stays input_file_name() (file:///...), not _metadata's
+    # file:/... form: the dead-letter channels print it
     if strategy == "lines":
-        raw = reader.text(paths).select(
+        raw = raw.select(
             F.input_file_name().alias("file"),
             F.col("value").alias("line"),
             F.monotonically_increasing_id().alias("_mid"),
         )
-        if apply_division_filter:
-            # per-line regex on the path string — acceptable for the
-            # large-file fallback; the wholetext path evaluates it once
-            # per file
-            raw = raw.where(E.matches_sequence_division(F.col("file")))
-        if target_partitions:
-            # clusters by file, so the window below adds no exchange
-            raw = raw.repartition(target_partitions, "file")
         # ordering guard: _mid is monotone per file ONLY while every
         # admitted file is non-splittable (one file = one read split);
         # a splittable member would interleave its splits
@@ -89,21 +89,15 @@ def read_embl_lines(
             (F.row_number().over(w) - 1).cast("long").alias("line_no"),
             "line",
         )
-    raw = reader.text(paths, wholetext=True).select(
-        F.input_file_name().alias("file"),
-        F.col("value"),
-    )
-    if apply_division_filter:
-        raw = raw.where(E.matches_sequence_division(F.col("file")))
     # Repartition the WHOLE-FILE blobs by file before exploding: the
     # shuffle then moves one row per file instead of millions of line
     # rows, and the resulting hashpartitioning(file) satisfies every
     # downstream clustering requirement (windows and group-bys all key
     # on a `file` prefix), so the entire sessionization pipeline runs
     # with no further exchange of line data.
-    if target_partitions is None:
-        target_partitions = spark.sparkContext.defaultParallelism * 2
-    raw = raw.repartition(target_partitions, "file")
+    raw = raw.select(F.input_file_name().alias("file"), "value").repartition(
+        spark.sparkContext.defaultParallelism * 2, "file"
+    )
     # universal-newline split — the reference reads with text-mode
     # gzip.open (newline=None), so \r\n and \r collapse to \n
     return raw.select(

@@ -10,9 +10,10 @@ batching disappears.
 Scale: UniProt's idmapping is ~O(10^9) rows but only two narrow string
 columns; at 100 TB input the right physical strategy is a shuffled join
 with both sides hash-partitioned on ``foreign_id`` — or a broadcast if a
-division-filtered subset fits (ena ids per run are a small slice).  We
-leave that choice to AQE and expose ``prefer_broadcast`` for the cases
-the caller knows are small.
+division-filtered subset fits (ena ids per run are a small slice).  The
+planner and AQE make that choice from the relation's size: a mapping
+under ``spark.sql.autoBroadcastJoinThreshold`` is broadcast, a larger
+one is shuffle-joined.
 """
 
 from __future__ import annotations

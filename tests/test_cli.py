@@ -69,6 +69,28 @@ def test_cli_end_to_end(spark, corpus, idmapping_parquet, tmp_path):
     assert "non_fungi_eukaryote" in reasons
 
 
+@pytest.mark.parametrize("rejects", [False, True])
+def test_cli_releases_its_cache(spark, corpus, idmapping_parquet, tmp_path, rejects):
+    """With --rejects-dir the three writes share a persisted line table;
+    cli.main must release it, and without dead letters cache nothing."""
+    persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs())  # noqa: E731
+    # an equal plan cached by an earlier test would absorb a new persist
+    spark.catalog.clearCache()
+    before = persisted()
+    argv = [
+        "--ena-paths", str(corpus),
+        "--output-dir", str(tmp_path / "ena_out"),
+        "--idmapping-parquet", idmapping_parquet,
+        "--master", "local[4]",
+        "--shuffle-partitions", "4",
+    ]
+    if rejects:
+        argv += ["--rejects-dir", str(tmp_path / "rejects")]
+    cli.main(argv)
+    assert _read_tsv_rows(tmp_path / "ena_out") == sorted(EXPECTED_ENA_TAB)
+    assert persisted() == before
+
+
 def test_cli_requires_idmapping_source(capsys):
     with pytest.raises(SystemExit):
         cli.parse_args(["--ena-paths", "/x", "--output-dir", "/y"])

@@ -32,9 +32,7 @@ def test_random_corpus_matches_reference(spark, tmp_path):
     from ena_database_build_spark.sources.embl import read_embl_lines
 
     idmap = spark.createDataFrame(pairs, "foreign_id string, uniprot_id string")
-    tab = build_ena_tab(
-        read_embl_lines(spark, str(root)), idmap, broadcast_mapping=True
-    ).drop("file")
+    tab = build_ena_tab(read_embl_lines(spark, str(root)), idmap).drop("file")
     spark_rows = sorted(
         "\t".join(str(v) for v in r) for r in tab.collect()
     )

@@ -82,7 +82,8 @@ def test_check_window_ordering_pinned():
     17 r11-window rows, `s3_scan_projection` first — see the registry
     header ledger) so a refactor cannot silently reorder the dict and
     destroy the graded window.  UPDATE THIS LIST ONLY when a rotation
-    is deliberately applied (tools/rotate_catalog_r14.py --apply)."""
+    is deliberately applied (the one-shot tools/rotate_catalog_r14.py
+    --apply; git history keeps the removed script)."""
     from ena_database_build_spark.plans.catalog import CATALOG
 
     expected = [

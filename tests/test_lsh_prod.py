@@ -1,5 +1,6 @@
 """Production-banded LSH row (q_lsh_candidate_pairs_prod): oracle
-parity BEFORE its r11 registration (tools/rotate_catalog_r11.py), so
+parity BEFORE its r11 registration (the one-shot
+tools/rotate_catalog_r11.py; git history keeps the removed script), so
 the row enters the graded window already test-pinned.
 
 The row is deliberately unregistered through round 10 (zero-net-new

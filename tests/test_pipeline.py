@@ -4,11 +4,14 @@ compared against the golden output of the *reference* implementation
 tests/tools/gen_golden.py)."""
 
 import gzip
+import re
+from collections import Counter
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from ena_database_build_spark.operators import segmentation as S
 from ena_database_build_spark.plans import ena_pipeline as P
 from ena_database_build_spark.sources.embl import read_embl_lines
 from ena_database_build_spark.sources.sinks import write_ena_tab
@@ -50,8 +53,64 @@ def _rows(df):
 
 def test_build_ena_tab_matches_reference_golden(spark, corpus, idmapping_df):
     lines = read_embl_lines(spark, str(corpus))
-    tab = P.build_ena_tab(lines, idmapping_df, broadcast_mapping=True)
-    assert _rows(tab.select(P.ENA_TAB_COLUMNS)) == sorted(EXPECTED_ENA_TAB)
+    tab = P.build_ena_tab(lines, idmapping_df).select(P.ENA_TAB_COLUMNS)
+    assert _rows(tab) == sorted(EXPECTED_ENA_TAB)
+    # no hint: the planner broadcasts the small idmapping on its own
+    plan = tab._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    plan = plan.split("== Initial Plan ==")[0]
+    assert re.search(
+        r"BroadcastHashJoin \[foreign_id#\d+\], \[foreign_id#\d+\], "
+        r"LeftOuter, BuildRight",
+        plan,
+    ), plan
+
+
+def test_build_all_builds_each_stage_once(monkeypatch, spark, corpus, idmapping_df):
+    """ena_tab and both dead-letter channels share one segmentation and
+    one records/blocks extraction."""
+    calls = Counter()
+    for name in ("segment_lines", "extract_records", "extract_cds_blocks"):
+        def counted(df, _name=name, _fn=getattr(S, name)):
+            calls[_name] += 1
+            return _fn(df)
+
+        monkeypatch.setattr(S, name, counted)
+    P.build_all(read_embl_lines(spark, str(corpus)), idmapping_df)
+    assert calls == {
+        "segment_lines": 1,
+        "extract_records": 1,
+        "extract_cds_blocks": 1,
+    }
+
+
+def _file_scans(node):
+    """FileSourceScanExec nodes of an executed (adaptive) plan."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _file_scans(node.executedPlan())
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _file_scans(node.plan())
+        return
+    if name == "FileSourceScanExec":
+        yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _file_scans(children.apply(i))
+
+
+@pytest.mark.parametrize("strategy", ["wholetext", "lines"])
+def test_division_filter_prunes_files_at_listing(spark, corpus, strategy):
+    """F1 drops sequence/con/rel_std_con_01_r138.dat.gz before the scan
+    opens it: the executed scan reads only the kept files."""
+    lines = read_embl_lines(spark, str(corpus), strategy=strategy)
+    kept = {r["file"] for r in lines.collect()}
+    assert len(kept) == len(FILES) - 1
+    assert not any("rel_std_con" in f for f in kept)
+    scans = list(_file_scans(lines._jdf.queryExecution().executedPlan()))
+    assert len(scans) == 1
+    assert scans[0].metrics().apply("numFiles").value() == len(kept)
 
 
 def test_dead_letter_channels(spark, corpus, idmapping_df):
@@ -118,5 +177,5 @@ def test_line_mode_ingest_equivalent(spark, corpus, idmapping_df):
     assert sorted(map(key, nonempty(whole).collect())) == sorted(
         map(key, nonempty(lines).collect())
     )
-    tab = P.build_ena_tab(lines, idmapping_df, broadcast_mapping=True)
+    tab = P.build_ena_tab(lines, idmapping_df)
     assert _rows(tab.select(P.ENA_TAB_COLUMNS)) == sorted(EXPECTED_ENA_TAB)

@@ -152,15 +152,7 @@ def run_spark(root: Path, pairs) -> tuple[float, list]:
     idmap.count()
 
     def build(paths: str):
-        return build_ena_tab(
-            read_embl_lines(spark, paths),
-            idmap,
-            broadcast_mapping=True,
-            # record headers here are ~200k tiny rows — known broadcast-
-            # sized, so skip AQE's size probe (this was the pipeline
-            # default in round 1; now opt-in per call site)
-            broadcast_records=True,
-        ).drop("file")
+        return build_ena_tab(read_embl_lines(spark, paths), idmap).drop("file")
 
     # JIT/codegen warm-up on one shard only — the timed run below
     # builds FRESH DataFrames so no data is cached between runs
