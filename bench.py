@@ -1,11 +1,12 @@
 """Benchmark harness: runs the headline catalog queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[N]``, N = ``measure.cpus()``, and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 ``value`` is total wall seconds across the headline set (lower is
-better).  Each query is materialized via a count/collect-free
+better).  Timing, the noop sink, the session and the DuckDB views come
+from ``tools/measure.py``: each query is materialized via
 ``write.format("noop")`` so measured time is plan execution, not
 driver-side row transfer.
 """
@@ -15,13 +16,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+sys.path.insert(0, str(Path(__file__).resolve().parent / "tools"))
+
+import measure  # noqa: E402
 
 from ena_database_build_spark.plans.catalog import CATALOG  # noqa: E402
-from ena_database_build_spark.session import get_spark  # noqa: E402
 
 HEADLINE = [
     "ena_context_analog",
@@ -53,22 +55,15 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # 8 shuffle partitions right-sizes the sf0.1 local run (measured
     # best of {4,8,16}; AQE re-splits skew and coalesces small
     # partitions at real scale, so this constant is not load-bearing on
     # a cluster)
-    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(min(cpus, 8))))
-    spark = get_spark(
-        "ena-bench", master=f"local[{cpus}]", shuffle_partitions=shuffle
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("ena-bench", max_shuffle=8)
 
     # warm the JVM + parquet footers once so per-query numbers measure
     # execution, not first-touch setup
-    CATALOG["s3_scan_projection"].spark(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    measure.noop(CATALOG["s3_scan_projection"].spark(spark, sf_dir))
 
     # steady-state timing: one warm-up run (pays one-time codegen/JIT
     # compilation — amortized to nothing on real corpus sizes), then the
@@ -81,13 +76,7 @@ def main() -> None:
     spread: dict[str, list[float]] = {}
     for name in HEADLINE:
         df = CATALOG[name].spark(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(3):
-            st = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - st)
-        runs.sort()
+        runs = measure.timed_runs(lambda: measure.noop(df))
         timings[name] = round(runs[1], 3)
         spread[name] = [round(runs[0], 3), round(runs[-1], 3)]
 
@@ -97,10 +86,23 @@ def main() -> None:
     # Same-session DuckDB oracle totals: the shared host's throughput
     # swings ~40% between measurement windows, so the absolute Spark
     # seconds of two different rounds are not comparable — the
-    # Spark/oracle RATIO measured back-to-back in ONE window is
-    # (round-3 VERDICT item #4).  Same protocol: warm-up run, then
-    # median of three.
-    oracle_timings = _time_oracles(sf_dir)
+    # Spark/oracle RATIO measured back-to-back in ONE window is.  Same
+    # protocol: warm-up run, then median of three.  The oracle side is
+    # a yardstick, never a reason to lose the Spark numbers, so a
+    # failure is reported on stderr and leaves ``oracle_total`` null.
+    oracle_timings: dict[str, float] = {}
+    try:
+        import duckdb
+
+        con = measure.duck_views(duckdb.connect(), sf_dir)
+        for name in HEADLINE:
+            sql = CATALOG[name].oracle
+            if sql is not None:
+                runs = measure.timed_runs(lambda: con.sql(sql).fetchall())
+                oracle_timings[name] = round(runs[1], 3)
+    except Exception as exc:  # noqa: BLE001 — yardstick only, see above
+        print(f"oracle timing failed: {exc!r}", file=sys.stderr)
+        oracle_timings = {}
     oracle_total = (
         round(sum(oracle_timings.values()), 3) if oracle_timings else None
     )
@@ -122,40 +124,6 @@ def main() -> None:
             }
         )
     )
-
-
-def _time_oracles(sf_dir: str) -> dict[str, float]:
-    """Times each headline query's DuckDB oracle over the same parquet
-    tables (median of 3 after one warm-up, matching the Spark
-    protocol).  Returns {} if anything fails — the oracle side is a
-    comparison yardstick, never a reason to lose the Spark numbers."""
-    try:
-        import duckdb
-
-        from ena_database_build_spark.plans.catalog import TABLES
-
-        con = duckdb.connect()
-        for tab in TABLES:
-            con.sql(
-                f"CREATE VIEW {tab} AS "
-                f"SELECT * FROM '{sf_dir}/{tab}.parquet'"
-            )
-        out: dict[str, float] = {}
-        for name in HEADLINE:
-            oracle = CATALOG[name].oracle
-            if oracle is None:
-                continue
-            con.sql(oracle).fetchall()
-            runs = []
-            for _ in range(3):
-                st = time.perf_counter()
-                con.sql(oracle).fetchall()
-                runs.append(time.perf_counter() - st)
-            runs.sort()
-            out[name] = round(runs[1], 3)
-        return out
-    except Exception:  # noqa: BLE001 — yardstick only, see docstring
-        return {}
 
 
 if __name__ == "__main__":

@@ -81,11 +81,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         help="spark.sql.shuffle.partitions (default: scale-aware)",
     )
     parser.add_argument(
-        "--no-division-filter",
-        action="store_true",
-        help="disable the F1 sequence/ division filename filter",
-    )
-    parser.add_argument(
         "--ingest-strategy",
         choices=["wholetext", "lines"],
         default="wholetext",
@@ -139,7 +134,6 @@ def main(argv: list[str] | None = None) -> None:
     lines = read_embl_lines(
         spark,
         args.ena_paths,
-        apply_division_filter=not args.no_division_filter,
         strategy=args.ingest_strategy,
     )
     if args.idmapping_parquet:

@@ -30,6 +30,17 @@ from pyspark.sql import functions as F
 _RANGE_PATTERN = r"(\d+\.\.\>?\d+)"
 
 
+def _endpoints(m: Column, start: str, end: str) -> tuple[Column, Column]:
+    """Split one matched ``x..y`` / ``x..>y`` token into LONG x and y,
+    aliased ``start`` and ``end``; the partial marker ``>`` is dropped."""
+    return (
+        F.substring_index(m, "..", 1).cast("long").alias(start),
+        F.replace(F.substring_index(m, "..", -1), F.lit(">"), F.lit(""))
+        .cast("long")
+        .alias(end),
+    )
+
+
 def location_ranges(loc_str: Column) -> Column:
     """P3: extract all ``x..y`` ranges -> ARRAY<STRUCT<start LONG, end LONG>>.
 
@@ -39,13 +50,7 @@ def location_ranges(loc_str: Column) -> Column:
     """
     matches = F.regexp_extract_all(loc_str, F.lit(_RANGE_PATTERN), 1)
     return F.transform(
-        matches,
-        lambda m: F.struct(
-            F.substring_index(m, "..", 1).cast("long").alias("start"),
-            F.replace(F.substring_index(m, "..", -1), F.lit(">"), F.lit(""))
-            .cast("long")
-            .alias("end"),
-        ),
+        matches, lambda m: F.struct(*_endpoints(m, "start", "end"))
     )
 
 
@@ -72,11 +77,7 @@ def explode_ranges(df, loc_col: Column, *keep_cols: str):
     (``resolved_span``) wants the ranges bound to one row map-side."""
     matches = F.regexp_extract_all(loc_col, F.lit(_RANGE_PATTERN), 1)
     return df.select(*keep_cols, F.explode(matches).alias("_m")).select(
-        *keep_cols,
-        F.substring_index("_m", "..", 1).cast("long").alias("range_start"),
-        F.replace(F.substring_index("_m", "..", -1), F.lit(">"), F.lit(""))
-        .cast("long")
-        .alias("range_end"),
+        *keep_cols, *_endpoints(F.col("_m"), "range_start", "range_end")
     )
 
 

@@ -707,13 +707,13 @@ def span_dedup(
     the dup-map build side (the r12/r13 documented floor).  The r14
     shared-exchange alternative (key the gram relation once by ``_g``,
     aggregate and equi-join over one ReusedExchange — kernel planned
-    ONCE) was built, plan-verified and measured in
-    ``tools/probe_span_shared.py``: it wins only in the launch-floor
-    regime (x1) and loses 12-15% at x30 where data dominates, because
-    the corpus-sized (id, pos, tok, gram) exchange outweighs the saved
-    kernel pass — and it forfeits map-side combine on the gram
-    aggregate, re-creating the hot-gram straggler this shape exists to
-    avoid.  The duplicate kernel is the cheaper side of that trade at
+    ONCE) was built, plan-verified and measured (the probe script is
+    in git history; numbers in OPTIMIZATION_r14.md): it wins only in
+    the launch-floor regime (x1) and loses 12-15% at x30 where data
+    dominates, because the corpus-sized (id, pos, tok, gram) exchange
+    outweighs the saved kernel pass — and it forfeits map-side combine
+    on the gram aggregate, re-creating the hot-gram straggler this shape
+    exists to avoid.  The duplicate kernel is the cheaper side of that trade at
     every scale that matters.
     """
     base = df.where(

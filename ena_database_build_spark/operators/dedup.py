@@ -190,23 +190,6 @@ def shingle_rows(
     return out.distinct() if distinct else out
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 8) -> list[Column]:
-    """``num_hashes`` MinHash values per document.
-
-    Hash family h_i(s) = md5(i || '|' || s); the min is taken over the
-    lexicographic order of the hex digest — deterministic, engine
-    portable (any md5 implementation agrees), and uniform enough for
-    Jaccard estimation.  Returns columns aliased ``mh0..mh{n-1}``.
-    """
-    def hasher(i: int):
-        return lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))
-
-    return [
-        F.array_min(F.transform(shingle_col, hasher(i))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",

@@ -77,20 +77,12 @@ def extract_records(segmented: DataFrame) -> DataFrame:
     # ~records-many rows, not every feature line of the corpus.
     relevant = segmented.where(
         F.col("is_id") | E.is_drop_taxonomy_line(F.col("line"))
-    )
-    return _aggregate_records(relevant)
-
-
-def _aggregate_records(flagged: DataFrame) -> DataFrame:
-    """Shared record-header aggregation: input rows carry ``file,
-    line_no, line, is_id, record_idx`` filtered to ID + voiding-OC
-    lines."""
-    parsed = flagged.withColumn(
+    ).withColumn(
         "id_info",
         F.when(F.col("is_id"), E.parse_id_line(F.col("line"))),
     )
     return (
-        parsed.where(F.col("record_idx") > 0)
+        relevant.where(F.col("record_idx") > 0)
         .groupBy("file", "record_idx")
         .agg(
             # exactly one ID line per record_idx by construction

@@ -31,26 +31,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 TOKEN_PATTERN = r"[A-Za-z]+|\d+|[^\sA-Za-z\d]"
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Per-language evidence score = number of tokens that are marker
-    words for that language.
-
-    NOT for multi-language hot paths: each returned Column re-evaluates
-    the tokenization (Catalyst does not CSE subexpressions across
-    expressions or into lambda bodies).  :func:`detect_lang` folds the
-    token array ONCE for all languages.
-    """
-    toks = tokens(text)
-
-    def matcher(markers: list[str]):
-        return lambda t: t.isin(*markers)
-
-    return {
-        lang: F.size(F.filter(toks, matcher(markers)))
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
 def lang_score_array(text: Column) -> Column:
     """All per-language scores as ARRAY<INT> (language-code order) from
     ONE tokenization and ONE fold over the tokens.
@@ -117,29 +97,14 @@ def punct_ratio(text: Column) -> Column:
     )
 
 
-def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
-    sw = stopwords or LANG_MARKERS["en"]
-    toks = tokens(text)
-    return F.size(F.filter(toks, lambda t: t.isin(*sw))) / F.greatest(
-        F.size(toks), F.lit(1)
-    )
-
-
-def mean_word_len(text: Column) -> Column:
-    toks = tokens(text)
-    return F.aggregate(
-        toks, F.lit(0), lambda acc, t: acc + F.length(t)
-    ) / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality heuristic: length sweet-spot, low punct
     density, reasonable stopword rate, sane word lengths.
 
     The three token features (stopword hits, summed token length,
-    token count) come from ONE fold over ONE ``tokens(text)`` — the
-    naive ``stopword_ratio(text) + mean_word_len(text)`` composition
-    re-tokenizes per feature because Catalyst does not CSE across
+    token count) come from ONE fold over ONE ``tokens(text)`` — a
+    naive composition of one stopword-ratio and one mean-word-length
+    expression re-tokenizes per feature because Catalyst does not CSE across
     lambda-bearing expressions (same trap as :func:`lang_score_array`;
     measured 2.24 s -> 1.0 s on the sf1 quality_gate pass).
 
@@ -220,8 +185,8 @@ def _kgram_hash_over_codes(codes) -> Column:
     O(k*len), the oracle's own envelope.
 
     Docs shorter than ``RH_K`` chars yield an EMPTY array (callers
-    drop them — a generator by exploding nothing, rolling_fingerprints
-    by its size>0 filter); NULL text propagates NULL the same way.
+    drop them — boilerplate_kgrams by exploding nothing,
+    rolling_fingerprints by its size>0 filter); NULL text propagates NULL the same way.
     Sum magnitude: 8 terms of (codepoint <= 0x10FFFF) * (power < 1e9)
     < 1e16, well inside int64 before the final mod."""
     m = F.greatest(F.size(codes) - (RH_K - 1), F.lit(0))
@@ -248,34 +213,6 @@ def _with_kgram_codes(df, text_col: str, id_col: str):
         F.transform(
             F.split(nt, ""), lambda c: F.ascii(c).cast("long")
         ).alias("_codes"),
-    )
-
-
-def kgram_hashes(df, text_col: str = "text", id_col: str = "doc_id"):
-    """One row per (doc, character-k-gram polynomial hash) — MAP-ONLY:
-    normalize once, one ascii-codes array per doc, then a HOF
-    ``transform`` composes each hash from k O(1) array reads and a
-    generator explodes the result.  No shuffle, no window, no per-doc
-    sort — the r11 char-``posexplode`` + 8-``lead``-window form was
-    correct but carried the catalog's largest constant factor
-    (6.0x/4.3x vs the oracle at sf1, VERDICT r11 'What's wrong' #1);
-    this is the map-only rewrite it prescribed, the DuckDB oracle's
-    own ``list_transform`` shape (``_rolling_sql`` in plans/catalog).
-
-    Scale posture: transient per-row memory is O(len(text)) for the
-    codes/hash arrays — the same envelope as the oracle; pathological
-    document lengths are capped upstream (quality gates) in any
-    100 TB corpus.  Parallelism comes from the file scan
-    (maxPartitionBytes row-group splits), not a pre-explode
-    repartition: the per-row work is now O(len) with a small
-    constant, so spreading it no longer justifies shuffling the full
-    corpus text."""
-    staged = _with_kgram_codes(df, text_col, id_col)
-    return staged.select(
-        F.col(id_col),
-        F.explode(_kgram_hash_over_codes(F.col("_codes"))).alias(
-            "kgram_hash"
-        ),
     )
 
 

@@ -7952,11 +7952,11 @@ def q_session_aggregates_bucketed_stream(spark, sf_dir):
     grade.  The residual ~5-7 s/batch spin-up is the documented floor
     of the TWS Python path on a cold query; a long-running production
     stream pays it once, not per batch.  r14 probed the floor's
-    composition (tools/probe_tws_batch.py, per-batch durationMs +
-    worker-reuse A/B): Python-worker reuse across batches is ALREADY
-    active (disabling it costs +78% wall), so the residual is the
-    per-batch RocksDB store open/commit per state partition plus the
-    TWS state-server handshake per task — not reclaimable worker
+    composition (a probe script kept in git history, per-batch
+    durationMs + worker-reuse A/B): Python-worker reuse across batches
+    is ALREADY active (disabling it costs +78% wall), so the residual
+    is the per-batch RocksDB store open/commit per state partition plus
+    the TWS state-server handshake per task — not reclaimable worker
     spin-up.
     Streaming-vs-batch THROUGHPUT comparisons belong to the batch
     twins (events_sessions, session_aggregates_bucketed), which are

@@ -104,10 +104,6 @@ def get_spark(
     )
     if local:
         builder = builder.config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(4 << 20)),
-        ).config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", str(1 << 20)),
-        )
+            "spark.sql.files.maxPartitionBytes", str(4 << 20)
+        ).config("spark.sql.files.openCostInBytes", str(1 << 20))
     return builder.getOrCreate()

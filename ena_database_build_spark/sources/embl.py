@@ -28,13 +28,12 @@ EMBL_GLOB = "*.dat.gz"
 def read_embl_lines(
     spark: SparkSession,
     paths: list[str] | str,
-    apply_division_filter: bool = True,
     strategy: str = "wholetext",
 ) -> DataFrame:
     """Read EMBL flat files under ``paths`` into the ordered-line schema
     ``file STRING, line_no LONG, line STRING``.
 
-    ``apply_division_filter`` reproduces F1: in ``sequence/`` trees only
+    F1 always applies: in ``sequence/`` trees only
     ``_(ENV|PRO|FUN|PHG)_`` division files are kept
     (ena_build/dask_tasks.py:78-85).  The predicate is on the scan's
     ``_metadata.file_path``, which Spark evaluates against the file
@@ -67,11 +66,8 @@ def read_embl_lines(
         spark.read.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", EMBL_GLOB)
         .text(paths, wholetext=strategy == "wholetext")
+        .where(E.matches_sequence_division(F.col("_metadata.file_path")))
     )
-    if apply_division_filter:
-        raw = raw.where(
-            E.matches_sequence_division(F.col("_metadata.file_path"))
-        )
     # `file` stays input_file_name() (file:///...), not _metadata's
     # file:/... form: the dead-letter channels print it
     if strategy == "lines":
@@ -106,8 +102,3 @@ def read_embl_lines(
             "line_no", "line"
         ),
     )
-
-
-def embl_lines_from_rows(spark: SparkSession, rows, schema="file string, line_no long, line string") -> DataFrame:
-    """Build the ordered-line DataFrame from in-memory rows (tests)."""
-    return spark.createDataFrame(rows, schema)

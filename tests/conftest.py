@@ -16,6 +16,9 @@ install_protobuf_shim()
 
 from ena_database_build_spark.session import get_spark  # noqa: E402
 
+# the smallest generated TPC-H-style corpus (TESTDATA.md)
+SF_DIR = "/root/testdata/sf0.001"
+
 
 @pytest.fixture(scope="session")
 def spark():

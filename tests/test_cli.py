@@ -88,7 +88,9 @@ def test_cli_releases_its_cache(spark, corpus, idmapping_parquet, tmp_path, reje
         argv += ["--rejects-dir", str(tmp_path / "rejects")]
     cli.main(argv)
     assert _read_tsv_rows(tmp_path / "ena_out") == sorted(EXPECTED_ENA_TAB)
-    assert persisted() == before
+    # only RDDs persisted during the run count: the context cleaner may
+    # meanwhile release ones that earlier tests localCheckpointed
+    assert persisted() - before == set()
 
 
 def test_cli_requires_idmapping_source(capsys):

@@ -16,9 +16,9 @@ while staying cheap at sf0.001.
 
 from concurrent.futures import ThreadPoolExecutor
 
+from conftest import SF_DIR
 from ena_database_build_spark.plans.catalog import CATALOG
 
-SF_DIR = "/root/testdata/sf0.001"
 NAMES = [
     "tpch_q1_pricing",
     "dedup_exact",

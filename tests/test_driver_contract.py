@@ -9,8 +9,8 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from conftest import SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
 SAMPLE = [
     "a4_circular_resolution",
     "g1_sessionize",

@@ -17,6 +17,7 @@ from pathlib import Path
 
 import pyarrow.parquet as pq
 import pytest
+from conftest import SF_DIR
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
@@ -27,7 +28,7 @@ from check_catalog import parse_spark_confs  # noqa: E402
 @pytest.fixture(scope="module")
 def scrambled(tmp_path_factory):
     out = tmp_path_factory.mktemp("sf_scramble")
-    mutate_scramble("/root/testdata/sf0.001", str(out))
+    mutate_scramble(SF_DIR, str(out))
     return out
 
 
@@ -38,13 +39,13 @@ def _rows(path) -> list[tuple]:
 
 
 def test_scramble_preserves_row_multiset(scrambled):
-    src = _rows("/root/testdata/sf0.001/lineitem.parquet")
+    src = _rows(f"{SF_DIR}/lineitem.parquet")
     dst = _rows(scrambled / "lineitem.parquet")
     assert sorted(map(repr, src)) == sorted(map(repr, dst))
 
 
 def test_scramble_actually_changes_order_and_layout(scrambled):
-    src = _rows("/root/testdata/sf0.001/orders.parquet")
+    src = _rows(f"{SF_DIR}/orders.parquet")
     dst = _rows(scrambled / "orders.parquet")
     assert src != dst  # a no-op permutation would gut the sweep
     parts = sorted((scrambled / "orders.parquet").glob("part-*.parquet"))
@@ -54,7 +55,7 @@ def test_scramble_actually_changes_order_and_layout(scrambled):
 
 
 def test_scramble_is_deterministic(scrambled, tmp_path):
-    mutate_scramble("/root/testdata/sf0.001", str(tmp_path / "again"))
+    mutate_scramble(SF_DIR, str(tmp_path / "again"))
     a = _rows(scrambled / "events.parquet")
     b = _rows(tmp_path / "again" / "events.parquet")
     assert a == b  # same seed -> same permutation, reproducible triage
@@ -84,9 +85,9 @@ def test_parse_spark_confs_rejects_malformed(argv):
 def test_skew_mode_collapses_half_onto_one_hot_key(tmp_path):
     from adversarial_corpus import SKEW_COLS, mutate_skew
 
-    mutate_skew("/root/testdata/sf0.001", str(tmp_path))
+    mutate_skew(SF_DIR, str(tmp_path))
     tbl = pq.read_table(tmp_path / "events.parquet")
-    src = pq.read_table("/root/testdata/sf0.001/events.parquet")
+    src = pq.read_table(f"{SF_DIR}/events.parquet")
     col = SKEW_COLS["events"]
     vals = tbl.column(tbl.schema.get_field_index(col)).to_pylist()
     hot = min(v for v in src.column(col).to_pylist() if v is not None)

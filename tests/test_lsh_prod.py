@@ -9,13 +9,12 @@ rotation will register."""
 
 import duckdb
 import pandas as pd
+from conftest import SF_DIR
 
 from ena_database_build_spark.plans.catalog import (
     SQL_LSH_PAIRS_PROD,
     q_lsh_candidate_pairs_prod,
 )
-
-SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_prod_lsh_matches_oracle_and_is_nonvacuous(spark):

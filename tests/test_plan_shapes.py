@@ -5,6 +5,7 @@ no full-relation single-partition shuffles) pinned as regression tests.
 
 import re
 
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from ena_database_build_spark.operators import curation as CUR
@@ -388,7 +389,7 @@ def test_quality_ensemble_scan_budget(spark):
     exchange subtrees until AQE reuse stops firing."""
     from ena_database_build_spark.plans.catalog import CATALOG
 
-    df = CATALOG["quality_ensemble"].spark(spark, "/root/testdata/sf0.001")
+    df = CATALOG["quality_ensemble"].spark(spark, SF_DIR)
     assert _final_scan_count(df) <= 3
 
 
@@ -399,9 +400,8 @@ def test_logprob_scoring_scan_budget(spark):
     statistic (round-5 restructure)."""
     from ena_database_build_spark.plans.catalog import CATALOG
 
-    sf = "/root/testdata/sf0.001"
-    assert _final_scan_count(CATALOG["unigram_logprob"].spark(spark, sf)) <= 2
-    assert _final_scan_count(CATALOG["bigram_logprob"].spark(spark, sf)) <= 2
+    assert _final_scan_count(CATALOG["unigram_logprob"].spark(spark, SF_DIR)) <= 2
+    assert _final_scan_count(CATALOG["bigram_logprob"].spark(spark, SF_DIR)) <= 2
 
 
 def test_bigram_logprob_pairs_compose_map_side(spark):
@@ -414,7 +414,7 @@ def test_bigram_logprob_pairs_compose_map_side(spark):
 
     plan = (
         CATALOG["bigram_logprob"]
-        .spark(spark, "/root/testdata/sf0.001")
+        .spark(spark, SF_DIR)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -545,7 +545,7 @@ def test_tpch_q5_asia_subtree_reuse(spark):
     n_nationkey."""
     from ena_database_build_spark.plans.catalog import CATALOG
 
-    df = CATALOG["tpch_q5_volume"].spark(spark, "/root/testdata/sf0.001")
+    df = CATALOG["tpch_q5_volume"].spark(spark, SF_DIR)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
@@ -574,7 +574,7 @@ def test_dq_report_three_orders_scans(spark):
     all 6 columns)."""
     from ena_database_build_spark.plans.catalog import CATALOG
 
-    df = CATALOG["dq_report"].spark(spark, "/root/testdata/sf0.001")
+    df = CATALOG["dq_report"].spark(spark, SF_DIR)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
@@ -605,7 +605,7 @@ def test_phrase_search_match_phase_is_map_only(spark):
 
     plan = (
         CATALOG["phrase_search"]
-        .spark(spark, "/root/testdata/sf0.001")
+        .spark(spark, SF_DIR)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -4,6 +4,7 @@ execution — this is what makes the §2.11 streaming surface one code
 path, not a fork."""
 
 import pytest
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from ena_database_build_spark.streaming import events as STR
@@ -13,7 +14,7 @@ from ena_database_build_spark.streaming import events as STR
 def event_dir(spark, tmp_path_factory):
     """Normalized (microsecond-ts) copy of sf0.001 events, split into
     multiple files so the stream sees several micro-batches."""
-    src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    src = spark.read.parquet(f"{SF_DIR}/events.parquet")
     if dict(src.dtypes).get("ts") == "bigint":
         src = src.withColumn(
             "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))

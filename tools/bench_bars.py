@@ -19,119 +19,48 @@ honest question is how the two walls move with data:
   is the explode + exchange of the distinct set, a constant factor,
   plus the 3-stage floor that dominates at small sf.
 
-This harness generates an N-replica corpus of ONLY the two tables the
-rows read (orders, lineitem; disjoint key spaces per replica, value
-columns copied verbatim — same device as tools/bench_scale.py) and
-times Spark vs DuckDB at each N, printing one JSON line with the
-curve.  Run on a quiet host (check /proc/loadavg first).
+This harness times Spark vs DuckDB over an N-replica corpus of ONLY
+the tables the selected rows read (``measure.replicate``: disjoint key
+spaces per replica, value columns copied verbatim — the same corpus as
+tools/bench_scale.py) at each N, best of 2 after a warm-up on both
+engines, and prints one JSON line with the curve.  Run on a quiet host
+(check /proc/loadavg first).
 
 Usage: python tools/bench_bars.py [N ...] [--rows a,b,...]
        (default: N = 1 10 30 100; rows = quantiles_exact,table_profile)
 
-Any catalog row reading only the KEY_COLS tables (orders, lineitem,
-supplier, customer, documents — keys offset per replica so replicas
-stay disjoint) plus the verbatim-copied dims (nation, region) can be
-curved with --rows; the corpus contains only the tables the selected
-rows actually read.  Round 9 added ``approx_quantiles`` (r8 verdict
-#4: its measured form bakes a full true-rank verification scan into
-the timed path — the curve pins that two-scan floor against the
-quickselect oracle).  Round 10 widens the table set for the r9
-perf-weak rows: ``ena_context_analog``, ``tpch_q7_nation_volume``,
-``span_dedup``, ``supplier_triangles``.  NOTE on span_dedup: a
-replicated documents corpus makes every 8-gram appear in N exact-copy
-documents, so dup density saturates at ~100% — both engines run the
-identical degenerate workload, which stresses the duplicated-gram
-semi-join and cover-window stages hardest; treat the curve as the
-upper-bound (worst-case) floor, not a typical-corpus ratio.
+Any catalog row with a DuckDB oracle can be curved with --rows; the
+corpus contains only the tables the selected rows read.  Round 9 added
+``approx_quantiles`` (r8 verdict #4: its measured form bakes a full
+true-rank verification scan into the timed path — the curve pins that
+two-scan floor against the quickselect oracle).  Round 10 widens the
+table set for the r9 perf-weak rows: ``ena_context_analog``,
+``tpch_q7_nation_volume``, ``span_dedup``, ``supplier_triangles``.
+NOTE on span_dedup: a replicated documents corpus makes every 8-gram
+appear in N exact-copy documents, so dup density saturates at ~100% —
+both engines run the identical degenerate workload, which stresses the
+duplicated-gram semi-join and cover-window stages hardest; treat the
+curve as the upper-bound (worst-case) floor, not a typical-corpus
+ratio.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
+import re
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb  # noqa: E402
-import pyarrow.compute as pc  # noqa: E402
-import pyarrow.parquet as pq  # noqa: E402
 
-from ena_database_build_spark.plans.catalog import CATALOG  # noqa: E402
-from ena_database_build_spark.session import get_spark  # noqa: E402
+import measure  # noqa: E402
 
-SRC = "/root/testdata/sf0.1"
-OFFSET = 10_000_000
-# Replicated tables: the listed key columns are offset by replica so
-# each replica is a DISJOINT key subgraph (joins never cross replicas
-# and per-key group sizes stay constant — the workload scales linearly
-# in N, which is what a floor curve must hold fixed).  Key sets are
-# closed under the FK edges the catalog rows traverse: l_suppkey and
-# s_suppkey shift together, o_custkey and c_custkey shift together.
-KEY_COLS = {
-    "orders": ["o_orderkey", "o_custkey"],
-    "lineitem": ["l_orderkey", "l_suppkey", "l_partkey"],
-    "supplier": ["s_suppkey"],
-    "customer": ["c_custkey"],
-    "part": ["p_partkey"],  # shifts with lineitem.l_partkey (r11)
-    "documents": ["doc_id"],
-    # ts is deliberately NOT offset: replicas are disjoint user/event
-    # key spaces over the SAME time range, so per-user operators scale
-    # linearly and window densities grow N-fold — both valid floor
-    # axes, stated in the curve docstrings
-    "events": ["event_id", "user_id"],
-}
-# Fixed-cardinality dims: copied VERBATIM exactly once (replicating a
-# 25-row nation would duplicate dim rows and corrupt every FK join).
-# s_nationkey / c_nationkey are deliberately NOT offset above.
-DIMS = ("nation", "region")
+from ena_database_build_spark.plans.catalog import CATALOG, TABLES  # noqa: E402
+
 ROWS = ("quantiles_exact", "table_profile")
-
-
-def generate(out_dir: str, replicas: int, tables: set[str]) -> None:
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    legacy = out / f".complete_{replicas}"  # pre-r10 whole-dir marker
-    for name in sorted(tables):
-        marker = out / f".complete_{name}_{replicas}"
-        if marker.exists():
-            continue
-        if legacy.exists() and name in ("orders", "lineitem"):
-            marker.touch()
-            continue
-        dest = out / f"{name}.parquet"
-        if dest.exists():
-            shutil.rmtree(dest)
-        dest.mkdir()
-        tbl = pq.read_table(f"{SRC}/{name}.parquet")
-        if name in DIMS:
-            pq.write_table(tbl, dest / "part-000.parquet")
-        else:
-            for i in range(replicas):
-                rep = tbl
-                off = i * OFFSET
-                if off:
-                    for k in KEY_COLS[name]:
-                        rep = rep.set_column(
-                            rep.schema.get_field_index(k),
-                            k,
-                            pc.add(rep.column(k), off),
-                        )
-                pq.write_table(rep, dest / f"part-{i:03d}.parquet")
-        marker.touch()
-
-
-def time_best2(fn) -> float:
-    fn()  # warm-up
-    runs = []
-    for _ in range(2):
-        st = time.perf_counter()
-        fn()
-        runs.append(time.perf_counter() - st)
-    return round(min(runs), 3)
 
 
 def main() -> None:
@@ -147,56 +76,34 @@ def main() -> None:
         if unknown:
             raise SystemExit(f"unknown row(s): {unknown}")
     ns = [int(a) for a in argv] or [1, 10, 30, 100]
-    # the corpus contains ONLY the tables the selected rows read (the
-    # generator can replicate every KEY_COLS table, but writing unused
-    # 100-replica tables wastes minutes); a row touching a table this
-    # tool can't synthesize is rejected upfront by scanning its oracle
-    # for table references (engine and oracle read the same tables by
-    # construction)
-    import re
-
-    from ena_database_build_spark.plans.catalog import TABLES
-
+    # the corpus contains ONLY the tables the selected rows read
+    # (writing unused 100-replica tables wastes minutes), found by
+    # scanning each oracle for table references (engine and oracle
+    # read the same tables by construction)
     needed: set[str] = set()
     for r in rows:
-        sql = CATALOG[r].oracle or ""
-        refs = {t for t in TABLES if re.search(rf"\b{t}\b", sql)}
-        bad = sorted(refs - set(KEY_COLS) - set(DIMS))
-        if bad or not sql:
-            raise SystemExit(
-                f"row {r!r} reads table(s) {bad or '<no oracle>'} — "
-                f"only {sorted(KEY_COLS) + sorted(DIMS)} are "
-                f"synthesizable by this tool"
-            )
-        needed |= refs
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        "ena-bench-bars", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+        sql = CATALOG[r].oracle
+        if not sql:
+            raise SystemExit(f"row {r!r} has no oracle to curve against")
+        needed |= {t for t in TABLES if re.search(rf"\b{t}\b", sql)}
+    spark = measure.session("ena-bench-bars")
 
     curve: dict[str, dict] = {name: {} for name in rows}
     for n in ns:
         out_dir = f"/tmp/spark_graft_bars_{n}"
-        generate(out_dir, n, needed)
+        measure.replicate(out_dir, n, needed)
+        con = measure.duck_views(duckdb.connect(), out_dir)
         for name in rows:
             df = CATALOG[name].spark(spark, out_dir)
-            s = time_best2(
-                lambda: df.write.format("noop").mode("overwrite").save()
-            )
-            con = duckdb.connect()
-            for t in sorted(needed):
-                con.sql(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{out_dir}/{t}.parquet/*.parquet'"
-                )
-            d = time_best2(lambda: con.sql(CATALOG[name].oracle).arrow())
-            con.close()
+            s = round(measure.timed_runs(lambda: measure.noop(df), 2)[0], 3)
+            sql = CATALOG[name].oracle
+            d = round(measure.timed_runs(lambda: con.sql(sql).arrow(), 2)[0], 3)
             curve[name][f"x{n}"] = {
                 "spark_s": s,
                 "duck_s": d,
                 "ratio": round(s / d, 2) if d else None,
             }
+        con.close()
     print(
         json.dumps(
             {

@@ -3,16 +3,19 @@ the "the exact-distinct exchange is the thing that scales OUT" claim
 with a measurement instead of an argument).
 
 For each core count, a FRESH Spark session (own JVM, local[N],
-shuffle_partitions=N) times the row over the same replica corpus
-(tools/bench_bars.py layout), and DuckDB times the oracle once for
-reference.  If the engine wall SHRINKS with cores while the oracle's
-single-process wall is fixed, the row's asymptotic ratio on one box is
-a parallelism budget, not a plan defect — on a real cluster the same
-plan keeps scaling where the in-process oracle has already stopped.
+shuffle_partitions=N unless ``$SPARK_GRAFT_SHUFFLE`` is set) times
+the row over the same replica corpus (tools/bench_bars.py layout), and
+DuckDB times the oracle once for reference.  If the engine wall
+SHRINKS with cores while the oracle's single-process wall is fixed,
+the row's asymptotic ratio on one box is a parallelism budget, not a
+plan defect — on a real cluster the same plan keeps scaling where the
+in-process oracle has already stopped.
 
 Each core count runs in a SUBPROCESS so the JVM/thread-pool size is
 genuinely N (a resized SparkContext in-process would inherit warmed
-pools and lie).
+pools and lie).  Each child times the row best of 2 after a warm-up,
+building a fresh plan per run; the oracle's time is one run after a
+warm-up.  Timing, session and DuckDB views come from ``measure``.
 
 Usage: python tools/bench_parallel.py <row> <data_dir> [cpus ...]
        (default cpus: 4 8 16 32)
@@ -24,31 +27,22 @@ import json
 import os
 import subprocess
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+import measure  # noqa: E402
+
 _CHILD = """
-import sys, time
-sys.path.insert(0, {root!r})
+import sys
+sys.path.insert(0, {tools!r})
+import measure
 from ena_database_build_spark.plans.catalog import CATALOG
-from ena_database_build_spark.session import get_spark
-spark = get_spark("bench-parallel", master="local[{n}]",
-                  shuffle_partitions={n})
-spark.sparkContext.setLogLevel("ERROR")
-
-def run():
-    df = CATALOG[{row!r}].spark(spark, {data!r})
-    df.write.format("noop").mode("overwrite").save()
-
-run()  # warm-up (JIT + parquet footer cache)
-walls = []
-for _ in range(2):
-    st = time.perf_counter()
-    run()
-    walls.append(time.perf_counter() - st)
-print("WALL", min(walls))
+spark = measure.session("bench-parallel", {n})
+runs = measure.timed_runs(
+    lambda: measure.noop(CATALOG[{row!r}].spark(spark, {data!r})), 2
+)
+print("WALL", runs[0])
 """
 
 
@@ -57,11 +51,11 @@ def main() -> None:
         raise SystemExit(__doc__)
     row, data = sys.argv[1], sys.argv[2]
     cpus = [int(a) for a in sys.argv[3:]] or [4, 8, 16, 32]
-    root = str(Path(__file__).resolve().parent.parent)
+    tools = str(Path(__file__).resolve().parent)
 
     curve = {}
     for n in cpus:
-        code = _CHILD.format(root=root, n=n, row=row, data=data)
+        code = _CHILD.format(tools=tools, n=n, row=row, data=data)
         out = subprocess.run(
             [sys.executable, "-c", code],
             capture_output=True, text=True, check=True,
@@ -76,15 +70,9 @@ def main() -> None:
 
     from ena_database_build_spark.plans.catalog import CATALOG
 
-    con = duckdb.connect()
-    for t in ("orders", "lineitem"):
-        p = f"{data}/{t}.parquet"
-        glob = f"{p}/*.parquet" if Path(p).is_dir() else p
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{glob}'")
-    con.sql(CATALOG[row].oracle).arrow()  # warm-up
-    st = time.perf_counter()
-    con.sql(CATALOG[row].oracle).arrow()
-    duck = round(time.perf_counter() - st, 3)
+    con = measure.duck_views(duckdb.connect(), data)
+    sql = CATALOG[row].oracle
+    duck = round(measure.timed_runs(lambda: con.sql(sql).arrow(), 1)[0], 3)
 
     print(json.dumps({
         "metric": "parallelism_scaling_curve",

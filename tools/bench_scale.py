@@ -7,9 +7,12 @@ the ratio against Spark.  This harness builds a 10x corpus (~sf1,
 times BOTH engines on the same headline queries — the scale where
 engine throughput, not stage latency, decides the ratio.
 
-The generated corpus is MULTI-FILE parquet (one file per replica), so
-Spark's scans parallelize the way production inputs do; the catalog's
-single-split ``spread`` compensator stays dormant (dir, not file).
+The corpus comes from ``measure.replicate`` with per-replica document
+text, so exact/near-dedup keeps sf0.1's duplicate structure.  It is
+MULTI-FILE parquet (one file per replica), so Spark's scans parallelize
+the way production inputs do; the catalog's single-split ``spread``
+compensator stays dormant (dir, not file).  Each engine's time per
+query is the best of 2 after a warm-up.
 
 Usage:  python tools/bench_scale.py [replicas] [out_dir]
 Prints one JSON line mirroring bench.py's shape, plus DuckDB timings.
@@ -19,36 +22,16 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb  # noqa: E402
-import pyarrow as pa  # noqa: E402
-import pyarrow.compute as pc  # noqa: E402
-import pyarrow.parquet as pq  # noqa: E402
 
-from ena_database_build_spark.plans.catalog import CATALOG, TABLES  # noqa: E402
-from ena_database_build_spark.session import get_spark  # noqa: E402
+import measure  # noqa: E402
 
-SRC = "/root/testdata/sf0.1"
-OFFSET = 10_000_000  # disjoint key space per replica; joins stay intra-replica
-
-# key columns shifted per replica so every equi-join matches exactly as
-# it does at sf0.1 (no cross-replica fan-in)
-KEY_COLS = {
-    "customer": ["c_custkey"],
-    "supplier": ["s_suppkey"],
-    "part": ["p_partkey"],
-    "orders": ["o_orderkey", "o_custkey"],
-    "lineitem": ["l_orderkey", "l_suppkey", "l_partkey"],
-    "events": ["event_id", "user_id"],
-    "documents": ["doc_id"],
-    "embeddings": ["vec_id"],
-}
+from ena_database_build_spark.plans.catalog import CATALOG  # noqa: E402
 
 from bench import HEADLINE  # noqa: E402  — one source of truth
 
@@ -147,89 +130,28 @@ SCALE_EXTRAS = [
 SCALE_QUERIES = HEADLINE + SCALE_EXTRAS
 
 
-def generate(out_dir: str, replicas: int) -> None:
-    out = Path(out_dir)
-    if out.exists():
-        shutil.rmtree(out)
-    out.mkdir(parents=True)
-    for name in TABLES:
-        tbl = pq.read_table(f"{SRC}/{name}.parquet")
-        keys = KEY_COLS.get(name)
-        dest = out / f"{name}.parquet"
-        if not keys:  # region/nation: tiny dims, copy once
-            pq.write_table(tbl, dest)
-            continue
-        dest.mkdir()
-        for i in range(replicas):
-            rep = tbl
-            off = i * OFFSET
-            if off:
-                for k in keys:
-                    rep = rep.set_column(
-                        rep.schema.get_field_index(k),
-                        k,
-                        pc.add(rep.column(k), off),
-                    )
-            if name == "documents":
-                # vary the text per replica so exact/near-dedup keeps
-                # sf0.1's duplicate structure instead of a degenerate
-                # everything-matches-everything corpus
-                idx = rep.schema.get_field_index("text")
-                rep = rep.set_column(
-                    idx,
-                    "text",
-                    pc.binary_join_element_wise(
-                        rep.column("text").cast(pa.string()), f" r{i}", " "
-                    ),
-                )
-            pq.write_table(rep, dest / f"part-{i:03d}.parquet")
-
-
-def time_best2(fn) -> float:
-    fn()  # warm-up
-    runs = []
-    for _ in range(2):
-        st = time.perf_counter()
-        fn()
-        runs.append(time.perf_counter() - st)
-    return round(min(runs), 3)
-
-
 def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/spark_graft_sf1"
-    # replica-count-specific marker: a stale corpus from a different
-    # replicas argument must be regenerated, not silently reused with
-    # the new count stamped into the output JSON
-    marker = Path(out_dir) / f".complete_{replicas}"
-    if not marker.exists():
-        generate(out_dir, replicas)
-        marker.touch()
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        "ena-bench-sf1", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    measure.replicate(out_dir, replicas, vary_text=True)
+    spark = measure.session("ena-bench-sf1")
 
     spark_t: dict[str, float] = {}
     for name in SCALE_QUERIES:
         df = CATALOG[name].spark(spark, out_dir)
-        spark_t[name] = time_best2(
-            lambda: df.write.format("noop").mode("overwrite").save()
+        spark_t[name] = round(
+            measure.timed_runs(lambda: measure.noop(df), 2)[0], 3
         )
 
-    con = duckdb.connect()
-    for name in TABLES:
-        p = Path(out_dir) / f"{name}.parquet"
-        src = f"{p}/*.parquet" if p.is_dir() else str(p)
-        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{src}'")
+    con = measure.duck_views(duckdb.connect(), out_dir)
     # .arrow() fully materializes the result vectorized — comparable to
     # Spark's noop sink (full compute, no row-at-a-time driver transfer)
     duck_t: dict[str, float] = {}
     for name in SCALE_QUERIES:
         sql = CATALOG[name].oracle
-        duck_t[name] = time_best2(lambda: con.sql(sql).arrow())
+        duck_t[name] = round(
+            measure.timed_runs(lambda: con.sql(sql).arrow(), 2)[0], 3
+        )
 
     total_s = round(sum(spark_t.values()), 3)
     total_d = round(sum(duck_t.values()), 3)

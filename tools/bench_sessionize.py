@@ -15,7 +15,8 @@ over ~a month so sessions are plentiful), and times:
 Full-row parity (an order-insensitive xxhash64 digest over every
 output column, plus count and event-total) is asserted on every run
 before timing is reported — a fast wrong answer is not a result, and
-aggregate-only totals would admit compensating boundary errors.
+aggregate-only totals would admit compensating boundary errors.  Each
+form's time is the best of 2 after a warm-up (``measure.timed_runs``).
 
 Usage: python tools/bench_sessionize.py [n_events] [hot_pct]
 Prints one JSON line {"n": ..., "native_s": ..., "bucketed_s": ...}.
@@ -26,35 +27,21 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from ena_database_build_spark.session import get_spark  # noqa: E402
+import measure  # noqa: E402
+
 from ena_database_build_spark.streaming import events as STR  # noqa: E402
-
-
-def time_best2(fn) -> float:
-    fn()  # warm-up
-    runs = []
-    for _ in range(2):
-        st = time.perf_counter()
-        fn()
-        runs.append(time.perf_counter() - st)
-    return round(min(runs), 3)
 
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
     hot_pct = int(sys.argv[2]) if len(sys.argv) > 2 else 50
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        "bench-sessionize", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("bench-sessionize")
 
     # ~a month of event time; deterministic hash spreads arrival times
     # so sessions (10 min gap) open and close constantly for every user
@@ -76,14 +63,12 @@ def main() -> None:
     )
 
     def run_native():
-        STR.session_aggregates(ev, "10 minutes").write.format(
-            "noop"
-        ).mode("overwrite").save()
+        measure.noop(STR.session_aggregates(ev, "10 minutes"))
 
     def run_bucketed():
-        STR.session_aggregates_bucketed(ev, "10 minutes", "1 hour").write.format(
-            "noop"
-        ).mode("overwrite").save()
+        measure.noop(
+            STR.session_aggregates_bucketed(ev, "10 minutes", "1 hour")
+        )
 
     # parity first: FULL-ROW parity, not aggregate parity — an
     # order-insensitive digest over every output column catches
@@ -106,8 +91,8 @@ def main() -> None:
     b = digest(STR.session_aggregates_bucketed(ev, "10 minutes", "1 hour"))
     assert a == b, f"parity broken: {a} vs {b}"
 
-    native_s = time_best2(run_native)
-    bucketed_s = time_best2(run_bucketed)
+    native_s = round(measure.timed_runs(run_native, 2)[0], 3)
+    bucketed_s = round(measure.timed_runs(run_bucketed, 2)[0], 3)
     print(json.dumps({
         "n": n, "hot_pct": hot_pct, "sessions": a[0],
         "native_s": native_s, "bucketed_s": bucketed_s,

@@ -32,7 +32,9 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-from ena_database_build_spark.plans.catalog import CATALOG, TABLES  # noqa: E402
+import measure  # noqa: E402
+
+from ena_database_build_spark.plans.catalog import CATALOG  # noqa: E402
 from ena_database_build_spark.session import get_spark  # noqa: E402
 
 
@@ -193,16 +195,9 @@ def main():
     for k, v in confs.items():
         spark.conf.set(k, v)
         print(f"spark-conf {k}={v}")
-    con = duckdb.connect()
-    import os
-
-    for tab in TABLES:
-        # scramble-mode corpora lay each table out as a DIRECTORY of
-        # part files (Spark reads that natively; DuckDB needs a glob)
-        path = f"{sf_dir}/{tab}.parquet"
-        if os.path.isdir(path):
-            path = f"{path}/*.parquet"
-        con.sql(f"CREATE VIEW {tab} AS SELECT * FROM '{path}'")
+    # scramble-mode corpora lay each table out as a DIRECTORY of part
+    # files; the views read either layout
+    con = measure.duck_views(duckdb.connect(), sf_dir)
     failures = []
     for name in names:
         qd = CATALOG[name]

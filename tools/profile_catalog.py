@@ -1,7 +1,8 @@
 """Full-catalog timing profile: Spark vs the DuckDB oracle per query.
 
-Runs EVERY catalog query on Spark (local[32]) and its oracle on DuckDB
-over the same parquet tables, and emits a JSON report sorted by
+Runs EVERY catalog query on Spark (``measure.session``: local[N], N =
+``measure.cpus()``) and its oracle on DuckDB over the same parquet
+tables (``measure.duck_views``), and emits a JSON report sorted by
 spark/oracle ratio.  Complements:
 
   * bench.py        — the 18-query headline gate (multi-rep, spreads)
@@ -37,7 +38,7 @@ Usage: python tools/profile_catalog.py [sf_dir] [out_json]
 ``--oracle-cap`` (default 300 s) interrupts a runaway DuckDB oracle
 (quadratic all-pairs forms at sf1) and records an explicit TIMEOUT
 row — the Spark timing still lands, and nothing is silently skipped.
-Directory-laid-out tables (bench_scale corpora) are glob-mounted.
+Directory-laid-out tables (bench_scale corpora) are read as well.
 
 ``--skip a,b,c`` excludes rows ON BOTH SIDES, printing a SKIP line
 per name.  HISTORY: through r10 the MinHash-family rows used
@@ -61,8 +62,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb  # noqa: E402
 
-from ena_database_build_spark.plans.catalog import CATALOG, TABLES  # noqa: E402
-from ena_database_build_spark.session import get_spark  # noqa: E402
+import measure  # noqa: E402
+
+from ena_database_build_spark.plans.catalog import CATALOG  # noqa: E402
 
 
 def timed_oracle(con, sql: str, cap_s: float) -> float | None:
@@ -144,24 +146,8 @@ def main() -> None:
     for n in sorted(skip):
         # loud, per-row: a skipped row must never read as covered
         print(f"SKIP  {n} (--skip)", flush=True)
-    import os
-
-    # default to the full 32-thread harness get_spark's bare default
-    # is local[4] — an unexported SPARK_GRAFT_CPUS silently quartered
-    # every Spark wall in an r11 profile run (caught by the drift
-    # check against the prior round's record)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        "profile-catalog", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
-
-    con = duckdb.connect()
-    for tab in TABLES:
-        # scale corpora lay tables out as directories of part files
-        path = f"{sf_dir}/{tab}.parquet"
-        if os.path.isdir(path):
-            path = f"{path}/*.parquet"
-        con.sql(f"CREATE VIEW {tab} AS SELECT * FROM '{path}'")
+    spark = measure.session("profile-catalog")
+    con = measure.duck_views(duckdb.connect(), sf_dir)
     rows = []
     for name, qd in CATALOG.items():
         if (only and name not in only) or name in skip:
@@ -171,7 +157,7 @@ def main() -> None:
             for _ in range(2):
                 df = qd.spark(spark, sf_dir)  # fresh plan: no AQE stage reuse
                 t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
+                measure.noop(df)
                 reps.append(time.perf_counter() - t0)
         except Exception as exc:  # noqa: BLE001
             print(f"ERR   {name}: {exc}", flush=True)

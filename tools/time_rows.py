@@ -4,20 +4,20 @@ Usage: python tools/time_rows.py <sf_dir> <name> [name ...]
        [--reps N | --reps=N]
 
 Median of N (default 3) timed noop saves after one warm-up, one
-Spark session for the whole run — the same methodology as bench.py,
-usable for any catalog row while optimizing.
+Spark session for the whole run — bench.py's protocol, through the same
+``measure`` core, usable for any catalog row while optimizing.
 """
 
 from __future__ import annotations
 
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+import measure  # noqa: E402
+
 from ena_database_build_spark.plans.catalog import CATALOG  # noqa: E402
-from ena_database_build_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -44,24 +44,11 @@ def main() -> None:
             args.append(a)
             i += 1
     sf_dir, names = args[0], args[1:]
-    import os
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(min(cpus, 8))))
-    spark = get_spark(
-        "time-rows", master=f"local[{cpus}]", shuffle_partitions=shuffle
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("time-rows", max_shuffle=8)
     for name in names:
         spark.sparkContext.setJobDescription(name)
         df = CATALOG[name].spark(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(reps):
-            st = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - st)
-        runs.sort()
+        runs = measure.timed_runs(lambda: measure.noop(df), reps)
         med = runs[len(runs) // 2]
         print(
             f"{name:34s} med {med:7.3f}s  "
