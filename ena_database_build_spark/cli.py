@@ -7,6 +7,9 @@ schedules Dask tasks.  Here the same surface wires the Spark lineage:
 
     read_embl_lines -> build_all -> write_ena_tab (+ dead letters)
 
+Like the reference, ingest streams every member line by line, whatever
+its size, so there is no ingest option.
+
 Scheduler knobs (``--scheduler-file``/``--n-workers``) become the Spark
 master URL and shuffle-partition count; ``--local-scratch`` maps to
 ``spark.local.dir`` (set via SPARK_LOCAL_DIR, see session.py).  The
@@ -41,7 +44,8 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         "--ena-paths",
         required=True,
         nargs="+",
-        help="directory roots searched recursively for *.dat.gz EMBL files",
+        help="directory roots searched recursively for *.dat.gz EMBL "
+        "files; each file is streamed line by line, whatever its size",
     )
     parser.add_argument(
         "--output-dir",
@@ -79,13 +83,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         type=int,
         default=None,
         help="spark.sql.shuffle.partitions (default: scale-aware)",
-    )
-    parser.add_argument(
-        "--ingest-strategy",
-        choices=["wholetext", "lines"],
-        default="wholetext",
-        help="wholetext: one blob row per file (default); lines: "
-        "line-mode scan for corpora with pathologically large members",
     )
     parser.add_argument(
         "--partition-by-source-dir",
@@ -131,11 +128,7 @@ def main(argv: list[str] | None = None) -> None:
         master=args.master,
         shuffle_partitions=args.shuffle_partitions,
     )
-    lines = read_embl_lines(
-        spark,
-        args.ena_paths,
-        strategy=args.ingest_strategy,
-    )
+    lines = read_embl_lines(spark, args.ena_paths)
     if args.idmapping_parquet:
         idmapping = read_idmapping_parquet(spark, args.idmapping_parquet)
     else:

@@ -43,7 +43,12 @@ def segment_lines(embl_lines: DataFrame) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     line = F.col("line")
-    flagged = embl_lines.where(E.is_interesting_line(line)).select(
+    # The windows' file exchange, placed below the flags: the records and
+    # the blocks branch prune the flags and windows differently, so only
+    # this subtree is the same in both and Spark reuses its exchange (one
+    # scan, one line shuffle for both).
+    kept = embl_lines.where(E.is_interesting_line(line)).repartition("file")
+    flagged = kept.select(
         "*",
         E.is_id_line(line).alias("is_id"),
         E.is_feature_start(line).alias("is_ft_start"),

@@ -61,10 +61,11 @@ def _extract(segmented: DataFrame) -> tuple[DataFrame, DataFrame]:
     """G1/G2 close-out: per-record headers and CDS blocks with their
     location string (P7).
 
-    Both branches read the same ``segmented`` table: a records path that
-    re-derived ``record_idx`` from its own ID/OC line filter measured
-    2-5x slower end-to-end, because it forfeits subtree reuse with the
-    blocks branch.
+    Both branches read the same ``segmented`` table, but column pruning
+    cuts ``segment_lines`` down to a different ``Window`` in each, so
+    the only subtree they share is the file exchange below its flags.
+    Spark reuses that exchange (``ReusedExchange``): the lines are
+    scanned and shuffled once for both branches.
     """
     records = S.extract_records(segmented)
     blocks = S.extract_cds_blocks(segmented).withColumn(

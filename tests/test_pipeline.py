@@ -18,14 +18,18 @@ from ena_database_build_spark.sources.sinks import write_ena_tab
 from tests.fixtures.embl_fixtures import EXPECTED_ENA_TAB, FILES, IDMAPPING
 
 
+def _write(root, members, newline="\n"):
+    for rel, text in members.items():
+        p = root / rel
+        p.parent.mkdir(parents=True, exist_ok=True)
+        with gzip.open(p, "wb") as f:
+            f.write(text.replace("\n", newline).encode())
+
+
 @pytest.fixture(scope="module")
 def corpus(tmp_path_factory):
     root = tmp_path_factory.mktemp("ena_corpus")
-    for rel, text in FILES.items():
-        p = root / rel
-        p.parent.mkdir(parents=True, exist_ok=True)
-        with gzip.open(p, "wt") as f:
-            f.write(text)
+    _write(root, FILES)
     return root
 
 
@@ -100,11 +104,10 @@ def _file_scans(node):
         yield from _file_scans(children.apply(i))
 
 
-@pytest.mark.parametrize("strategy", ["wholetext", "lines"])
-def test_division_filter_prunes_files_at_listing(spark, corpus, strategy):
+def test_dropped_division_files_are_never_opened(spark, corpus):
     """F1 drops sequence/con/rel_std_con_01_r138.dat.gz before the scan
     opens it: the executed scan reads only the kept files."""
-    lines = read_embl_lines(spark, str(corpus), strategy=strategy)
+    lines = read_embl_lines(spark, str(corpus))
     kept = {r["file"] for r in lines.collect()}
     assert len(kept) == len(FILES) - 1
     assert not any("rel_std_con" in f for f in kept)
@@ -164,18 +167,30 @@ def test_tsv_sink_roundtrip(spark, corpus, idmapping_df, tmp_path):
     }
 
 
-def test_line_mode_ingest_equivalent(spark, corpus, idmapping_df):
-    """The large-file fallback ingest (line mode) must produce the same
-    ordered lines and the same final table as wholetext mode."""
-    whole = read_embl_lines(spark, str(corpus))
-    lines = read_embl_lines(spark, str(corpus), strategy="lines")
-    key = lambda r: (r["file"], r["line_no"], r["line"])  # noqa: E731
-    # wholetext's split emits one phantom trailing '' per newline-
-    # terminated file; it never survives the F2 prefix filter, so
-    # compare the physical relations modulo empty lines
-    nonempty = lambda df: df.where("line != ''")  # noqa: E731
-    assert sorted(map(key, nonempty(whole).collect())) == sorted(
-        map(key, nonempty(lines).collect())
-    )
-    tab = P.build_ena_tab(lines, idmapping_df)
+def test_line_no_orders_each_files_lines(spark, tmp_path):
+    """Sorted by ``line_no``, each file's lines are its own gunzipped
+    lines, also when the scan packs several files into one partition."""
+    copies = 12
+    for k in range(copies):
+        _write(tmp_path / f"copy{k:02d}", FILES)
+    lines = read_embl_lines(spark, str(tmp_path))
+    by_file = {}
+    for r in lines.collect():
+        by_file.setdefault(r["file"], []).append((r["line_no"], r["line"]))
+    assert len(by_file) == copies * (len(FILES) - 1)
+    assert lines.rdd.getNumPartitions() < len(by_file)
+    for file, rows in by_file.items():
+        with gzip.open(file.removeprefix("file://"), "rt") as f:
+            want = f.read().splitlines()
+        assert [line for _, line in sorted(rows)] == want, file
+
+
+def test_universal_newlines(spark, tmp_path, idmapping_df):
+    """CRLF and bare CR end lines as LF does, as in the reference's
+    text-mode gzip.open."""
+    rels = list(FILES)
+    _write(tmp_path, {rels[0]: FILES[rels[0]]}, "\r\n")
+    _write(tmp_path, {rels[1]: FILES[rels[1]]}, "\r")
+    _write(tmp_path, {rel: FILES[rel] for rel in rels[2:]})
+    tab = P.build_ena_tab(read_embl_lines(spark, str(tmp_path)), idmapping_df)
     assert _rows(tab.select(P.ENA_TAB_COLUMNS)) == sorted(EXPECTED_ENA_TAB)

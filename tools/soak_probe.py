@@ -1,21 +1,15 @@
-"""Full-size scale-probe soak (round-2 verdict item #6).
+"""Full-size large-member soak.
 
 Generates ONE pathologically large gzipped EMBL member (default 400k
-records — ~1.9 GB decompressed text, ~28M lines), runs the pipeline
-under BOTH ingest strategies (``wholetext`` materializes the file as a
-single row; ``lines`` streams it as one row per line), asserts the two
-outputs are row-identical, and reports wall time plus the JVM's peak
-RSS (VmHWM) — the number that proves the ``lines`` fallback bounds
-executor memory on members far larger than the "relatively small"
-files the reference assumes (reference README.md:48).
+records: 2.9M lines, ~125 MB of text, 11 MB gzip'd), runs the pipeline on
+it, and reports the output rows, the wall time and the JVM's peak RSS
+(VmHWM).  Ingest streams the member one row per line, so no row is ever
+member-sized; the peak RSS shows that the executor memory stays bounded
+on members far larger than the "relatively small" files the reference
+assumes (reference README.md:48).  ``tests/test_scale_probe.py`` pins
+the output of the same record mix at 20k records.
 
-Usage: python tools/soak_probe.py [n_records] [--lines-only]
-
-``--lines-only`` skips the wholetext arm (at 400k records the
-single-row blob is exactly the memory hazard the fallback exists for;
-the equivalence of the two strategies is pinned at 20k records by
-tests/test_scale_probe.py, so the soak only needs the lines arm plus
-the blob-free memory ceiling).
+Usage: python tools/soak_probe.py [n_records]
 """
 
 from __future__ import annotations
@@ -35,12 +29,13 @@ from ena_database_build_spark.session import get_spark  # noqa: E402
 from ena_database_build_spark.sources.embl import read_embl_lines  # noqa: E402
 
 
-def write_corpus(root: Path, n_records: int) -> Path:
-    """Same record mix as tests/test_scale_probe.py, n× larger."""
-    p = root / "wgs" / "public" / "big" / "BIG001.dat.gz"
-    p.parent.mkdir(parents=True, exist_ok=True)
-    with gzip.open(p, "wt") as f:
-        for i in range(n_records):
+def write_member(path: Path, records: range) -> Path:
+    """Write ``records`` (ordinals of the soak's record mix) as one
+    gzipped EMBL member at ``path``.  Record ``i`` is ``BIG<i>``, so the
+    same ordinals give the same records in any file layout."""
+    path.parent.mkdir(parents=True, exist_ok=True)
+    with gzip.open(path, "wt") as f:
+        for i in records:
             chr_len = 1000 + (i % 9000)
             topo = "circular" if i % 5 == 0 else "linear"
             a, b = (i * 37) % 800 + 1, (i * 37) % 800 + 1 + (i % 120)
@@ -53,7 +48,7 @@ def write_corpus(root: Path, n_records: int) -> Path:
                 f'FT                   /protein_id="P{i % 1000}.1"\n'
                 f'FT                   /translation="MKV{"A" * (i % 40)}"\n'
             )
-            if i % 3 == 0:
+            if i % 3 == 0:  # no x..y range: an unparseable block (F7)
                 f.write(
                     "FT   CDS             467\n"
                     f'FT                   /protein_id="SKIP{i}.1"\n'
@@ -63,7 +58,16 @@ def write_corpus(root: Path, n_records: int) -> Path:
                     f"FT   CDS             complement({a + 2}..{b + 2})\n"
                     f'FT                   /db_xref="UniProtKB/TrEMBL:Q{i % 500}"\n'
                 )
-    return p
+    return path
+
+
+def idmapping(spark):
+    """The mapping the record mix is built against: every third of the
+    1,000 protein ids has a hit."""
+    return spark.createDataFrame(
+        [(f"P{i}.1", f"U{i}") for i in range(0, 1000, 3)],
+        "foreign_id string, uniprot_id string",
+    )
 
 
 def jvm_peak_rss_mb() -> float | None:
@@ -90,14 +94,14 @@ def jvm_peak_rss_mb() -> float | None:
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    n_records = int(args[0]) if args else 400_000
-    lines_only = "--lines-only" in sys.argv
+    n_records = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
 
     root = Path(tempfile.mkdtemp(prefix="soak_probe_"))
     try:
         st = time.perf_counter()
-        member = write_corpus(root, n_records)
+        member = write_member(
+            root / "wgs" / "public" / "big" / "BIG001.dat.gz", range(n_records)
+        )
         gz_mb = member.stat().st_size / (1 << 20)
         n_lines = sum(1 for _ in gzip.open(member, "rb"))
         print(
@@ -108,30 +112,13 @@ def main() -> None:
 
         spark = get_spark("soak-probe")
         spark.sparkContext.setLogLevel("ERROR")
-        idmap = spark.createDataFrame(
-            [(f"P{i}.1", f"U{i}") for i in range(0, 1000, 3)],
-            "foreign_id string, uniprot_id string",
+        st = time.perf_counter()
+        out = P.build_ena_tab(read_embl_lines(spark, str(root)), idmapping(spark))
+        n = out.count()
+        print(
+            f"{n} output rows in {time.perf_counter() - st:.1f}s, "
+            f"JVM peak RSS: {jvm_peak_rss_mb()} MB"
         )
-
-        results = {}
-        strategies = ["lines"] if lines_only else ["lines", "wholetext"]
-        for strategy in strategies:
-            st = time.perf_counter()
-            out = P.build_ena_tab(
-                read_embl_lines(spark, str(root), strategy=strategy), idmap
-            )
-            n = out.count()
-            wall = round(time.perf_counter() - st, 1)
-            results[strategy] = (n, wall)
-            print(
-                f"{strategy:10s}: {n} output rows in {wall}s, "
-                f"JVM peak RSS so far: {jvm_peak_rss_mb()} MB"
-            )
-
-        if len(results) == 2:
-            assert results["lines"][0] == results["wholetext"][0], results
-            print("row counts identical across strategies")
-        print(f"JVM peak RSS: {jvm_peak_rss_mb()} MB")
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -10,6 +10,7 @@ Spark session for the whole run — bench.py's protocol, through the same
 
 from __future__ import annotations
 
+import statistics
 import sys
 from pathlib import Path
 
@@ -49,7 +50,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(name)
         df = CATALOG[name].spark(spark, sf_dir)
         runs = measure.timed_runs(lambda: measure.noop(df), reps)
-        med = runs[len(runs) // 2]
+        med = statistics.median(runs)
         print(
             f"{name:34s} med {med:7.3f}s  "
             f"[{runs[0]:.3f}, {runs[-1]:.3f}] n={reps}"
