@@ -137,8 +137,9 @@ def main(argv: list[str] | None = None) -> None:
 
     result = build_all(lines, idmapping)
     if args.rejects_dir:
-        # the table and both dead-letter channels read one segmented
-        # line table: compute it once for the three writes
+        # the table and both dead-letter channels read one parsed frame
+        # (a row per record and per CDS block): parse once for the
+        # three writes
         result.segmented.persist()
     try:
         write_ena_tab(

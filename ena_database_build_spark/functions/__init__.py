@@ -1,7 +1,1 @@
-from ena_database_build_spark.functions.locations import (
-    location_ranges,
-    resolved_span,
-)
-from ena_database_build_spark.functions import embl
-
-__all__ = ["location_ranges", "resolved_span", "embl"]
+"""Line and location primitives of the EMBL parse (``embl``, ``locations``)."""

@@ -2,7 +2,10 @@
 
 Each function takes/returns Columns so Catalyst can push the cheap
 prefix predicates to the scan and keep every regex inside whole-stage
-codegen.  Patterns are behavior-pinned against the reference's compiled
+codegen; the catalog's EMBL rows use them.  The pattern constants are
+also what the per-file parse (``operators/segmentation.py``) compiles
+with Python ``re``; the two are pinned to classify the golden lines
+alike.  Patterns are behavior-pinned against the reference's compiled
 regexes (ena_build/parse_embl.py:16-47) and their golden tests
 (tests/regex_test.py).
 """
@@ -54,26 +57,27 @@ def parse_id_line(line: Column) -> Column:
     """P1 -> STRUCT<ena_id STRING, chr_struct INT, chr_len LONG>.
 
     Reproduces ``process_id_line`` (parse_embl.py:309-361) including the
-    dead-letter encoding: regex miss or unknown topology =>
-    ``ena_id=''``, ``chr_struct=-1``, ``chr_len=0``.  Topology encoding is
-    1=linear / 0=circular per the code (SURVEY.md §2.10.1).
+    dead-letter encoding: regex miss, unknown topology or a length beyond
+    int64 => ``ena_id=''``, ``chr_struct=-1``, ``chr_len=0``.  Topology
+    encoding is 1=linear / 0=circular per the code (SURVEY.md §2.10.1).
     """
     ena_id = F.regexp_extract(line, ID_LINE_PATTERN, 1)
     topo = F.regexp_extract(line, ID_LINE_PATTERN, 2)
-    chr_len = F.regexp_extract(line, ID_LINE_PATTERN, 3)
+    chr_len = F.regexp_extract(line, ID_LINE_PATTERN, 3).try_cast("long")
     matched = ena_id != ""
     known_topo = topo.isin("linear", "circular")
-    ok = matched & known_topo
+    ok = matched & known_topo & chr_len.isNotNull()
     return F.struct(
         F.when(ok, ena_id).otherwise(F.lit("")).alias("ena_id"),
         F.when(ok, F.when(topo == "linear", 1).otherwise(0))
         .otherwise(F.lit(-1))
         .cast("int")
         .alias("chr_struct"),
-        F.when(ok, chr_len.cast("long")).otherwise(F.lit(0)).alias("chr_len"),
+        F.when(ok, chr_len).otherwise(F.lit(0)).alias("chr_len"),
         # dead-letter discriminator for the _rejected channel
         F.when(~matched, F.lit("ill_formatted_id"))
         .when(~known_topo, F.lit("unknown_topology"))
+        .when(chr_len.isNull(), F.lit("chr_len_out_of_range"))
         .alias("reject_reason"),
     )
 

@@ -1,7 +1,10 @@
-"""CDS location-descriptor expressions (operators P3, O5, A3, A4).
+"""CDS location descriptors (operators P3, O5, A3, A4).
 
-Pure Catalyst column expressions — no UDFs — so the whole location
-pipeline stays inside whole-stage codegen and scales linearly with rows.
+Two forms of one contract.  ``parse_ranges`` and ``resolve_span`` are
+plain Python: the per-file EMBL parse (``operators/segmentation.py``)
+calls them once per CDS block.  ``has_range``, ``explode_ranges`` and
+``resolved_span_relational`` are Catalyst column expressions for
+DataFrames whose location strings are columns (the catalog's rows).
 
 Semantics pinned against the reference:
 
@@ -21,6 +24,9 @@ Semantics pinned against the reference:
 
 from __future__ import annotations
 
+import re
+from operator import itemgetter
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -28,128 +34,78 @@ from pyspark.sql import functions as F
 # (ena_build/parse_embl.py:43).  Spark's regexp_extract_all pulls a single
 # group, so we match the whole token and split endpoints afterwards.
 _RANGE_PATTERN = r"(\d+\.\.\>?\d+)"
+# re.ASCII: \d is [0-9], as in Java regex
+_RANGES = re.compile(_RANGE_PATTERN, re.ASCII).findall
 
 
-def _endpoints(m: Column, start: str, end: str) -> tuple[Column, Column]:
-    """Split one matched ``x..y`` / ``x..>y`` token into LONG x and y,
-    aliased ``start`` and ``end``; the partial marker ``>`` is dropped."""
-    return (
-        F.substring_index(m, "..", 1).cast("long").alias(start),
-        F.replace(F.substring_index(m, "..", -1), F.lit(">"), F.lit(""))
-        .cast("long")
-        .alias(end),
-    )
+def parse_ranges(loc_str: str) -> list[tuple[int, int]]:
+    """P3: every ``x..y`` range of a location string, left to right and
+    non-overlapping (``re.findall``).  ``1..>888`` yields (1, 888): the
+    partial marker ``>`` is dropped (reference tests/regex_test.py:66,81).
+    Endpoints are Python ints, so callers see values beyond int64."""
+    out = []
+    for m in _RANGES(loc_str):
+        start, _, end = m.partition("..")
+        out.append((int(start), int(end.lstrip(">"))))
+    return out
 
 
-def location_ranges(loc_str: Column) -> Column:
-    """P3: extract all ``x..y`` ranges -> ARRAY<STRUCT<start LONG, end LONG>>.
+def resolve_span(
+    ranges: list[tuple[int, int]], chr_struct: int, chr_len: int
+) -> tuple[int, int] | None:
+    """A3+A4: one (start, end) for a CDS's ranges, None when there are
+    none (F7 drops those blocks first).
 
-    Overlap semantics match ``re.findall`` (non-overlapping, left to
-    right).  ``1..>888`` yields (1, 888) — the partial marker ``>`` is
-    ignored (reference tests/regex_test.py:66,81).
+    ``chr_struct`` follows the reference encoding 1=linear, 0=circular
+    (the *code's* behavior, not the docstring's — SURVEY.md §2.10.1);
+    any nonzero value takes the linear path, like the reference's
+    ``if linear_chromosome:`` (ena_build/parse_embl.py:392).
     """
-    matches = F.regexp_extract_all(loc_str, F.lit(_RANGE_PATTERN), 1)
-    return F.transform(
-        matches, lambda m: F.struct(*_endpoints(m, "start", "end"))
-    )
+    if not ranges:
+        return None
+    if chr_struct != 0:
+        # min/max over every endpoint, not first-start/last-end, so
+        # descending ranges behave like the reference's min()/max()
+        return min(map(min, ranges)), max(map(max, ranges))
+    r = sorted(ranges, key=itemgetter(0))  # stable, like the reference
+    best_gap, pick = (chr_len - r[-1][1]) + (r[0][0] - 1), None
+    for i in range(len(r) - 1):
+        gap = r[i + 1][0] - r[i][1] - 1
+        if gap > best_gap:  # strict: a tie keeps the wrap / earlier gap
+            best_gap, pick = gap, i
+    if pick is None:
+        return r[0][0], r[-1][1]
+    return r[pick + 1][0], r[pick][1]
 
 
 def has_range(loc_str: Column) -> Column:
     """F7 drop predicate: TRUE iff the location string yields at least
-    one ``x..y`` range — definitionally ``size(location_ranges(s)) >
-    0``, expressed as ``rlike`` on the SAME pattern so consumers that
-    only gate on parseability never pay the full extract-all +
-    struct-build (2.2x at sf0.1; equivalence pinned by test)."""
+    one ``x..y`` range — definitionally ``len(parse_ranges(s)) > 0``,
+    expressed as ``rlike`` on the SAME pattern so consumers that only
+    gate on parseability never pay the full extract-all (equivalence
+    pinned by test)."""
     return loc_str.rlike(_RANGE_PATTERN)
 
 
 def explode_ranges(df, loc_col: Column, *keep_cols: str):
-    """Relational (exploded) form of ``location_ranges``: one output
-    row per ``x..y`` range with LONG ``range_start``/``range_end``
-    columns after the ``keep_cols``.
+    """Relational (exploded) form of ``parse_ranges``: one output row
+    per ``x..y`` range with LONG ``range_start``/``range_end`` columns
+    after the ``keep_cols``.
 
     Same regex, same non-overlapping left-to-right semantics, same
-    partial-marker (``>``) stripping as ``location_ranges`` — but the
-    endpoint split runs AFTER the explode as plain codegen'd column
-    expressions instead of inside an interpreted ``transform`` lambda
-    (measured 1.7x faster at sf0.1).  Use this when the consumer
-    explodes anyway; keep the array form where per-record aggregation
-    (``resolved_span``) wants the ranges bound to one row map-side."""
+    partial-marker (``>``) stripping as ``parse_ranges``; the endpoint
+    split runs after the explode as plain codegen'd column expressions
+    (measured 1.7x faster at sf0.1 than a ``transform`` lambda over
+    the extracted array)."""
     matches = F.regexp_extract_all(loc_col, F.lit(_RANGE_PATTERN), 1)
+    m = F.col("_m")
     return df.select(*keep_cols, F.explode(matches).alias("_m")).select(
-        *keep_cols, *_endpoints(F.col("_m"), "range_start", "range_end")
+        *keep_cols,
+        F.substring_index(m, "..", 1).cast("long").alias("range_start"),
+        F.replace(F.substring_index(m, "..", -1), F.lit(">"), F.lit(""))
+        .cast("long")
+        .alias("range_end"),
     )
-
-
-def resolved_span(ranges: Column, chr_struct: Column, chr_len: Column) -> Column:
-    """A3+A4: resolve ranges to a single STRUCT<start LONG, end LONG>.
-
-    ``chr_struct`` follows the reference encoding 1=linear, 0=circular
-    (the *code's* behavior, not the docstring's — SURVEY.md §2.10.1); any
-    nonzero value takes the linear path, mirroring Python truthiness of
-    the reference's ``if linear_chromosome:`` branch
-    (ena_build/parse_embl.py:392).
-
-    Returns NULL for an empty/null ranges array (callers drop those rows
-    first — operator F7).
-    """
-    chr_len = chr_len.cast("long")
-    # The reference sorts by start with a *stable* sort
-    # (parse_embl.py:401), so equal-start ranges keep their original
-    # order — observable in the circular gap analysis.  Reproduce by
-    # sorting (start, original_index, end) structs.
-    n = F.size(ranges)
-    r = F.array_sort(
-        F.zip_with(
-            ranges,
-            F.sequence(F.lit(1), n),
-            lambda x, i: F.struct(
-                x["start"].alias("start"), i.alias("idx"), x["end"].alias("end")
-            ),
-        )
-    )
-    starts = F.transform(r, lambda x: x["start"])
-    ends = F.transform(r, lambda x: x["end"])
-
-    # Linear: min/max over every endpoint of the *flattened* tuple list —
-    # not first-start/last-end — so malformed descending ranges behave
-    # exactly like the reference's min()/max() (parse_embl.py:395-396).
-    lin_start = F.least(F.array_min(starts), F.array_min(ends))
-    lin_end = F.greatest(F.array_max(starts), F.array_max(ends))
-
-    # Circular: gaps[j] = r[j+1].start - r[j].end - 1 for consecutive
-    # sorted ranges (1-based element_at).
-    gaps = F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda j: (
-            F.element_at(r, (j + 1).cast("int"))["start"]
-            - F.element_at(r, j.cast("int"))["end"]
-            - F.lit(1)
-        ).cast("long"),
-    )
-    wrap_gap = (chr_len - F.element_at(r, n)["end"]) + (
-        F.element_at(r, F.lit(1))["start"] - F.lit(1)
-    )
-    max_inner = F.array_max(gaps)
-    # First index (1-based) whose gap equals the max — matches the
-    # reference's strict-> scan keeping the first occurrence of the
-    # maximum (parse_embl.py:420-427).
-    gap_idx = F.array_position(gaps, max_inner).cast("int")
-
-    wrap_like = (n == F.lit(1)) | max_inner.isNull() | (max_inner <= wrap_gap)
-    circ_start = F.when(wrap_like, F.element_at(r, F.lit(1))["start"]).otherwise(
-        F.element_at(r, gap_idx + 1)["start"]
-    )
-    circ_end = F.when(wrap_like, F.element_at(r, n)["end"]).otherwise(
-        F.element_at(r, gap_idx)["end"]
-    )
-
-    linear = chr_struct.cast("int") != F.lit(0)
-    span = F.struct(
-        F.when(linear, lin_start).otherwise(circ_start).cast("long").alias("start"),
-        F.when(linear, lin_end).otherwise(circ_end).cast("long").alias("end"),
-    )
-    return F.when(ranges.isNull() | (F.size(ranges) == 0), F.lit(None)).otherwise(span)
 
 
 def resolved_span_relational(
@@ -164,13 +120,13 @@ def resolved_span_relational(
 
     Input: one row per range ``(key..., chr_struct, start, end)``.
     Output: one row per key ``(key..., chr_struct, start_pos, end_pos)``
-    with identical semantics to :func:`resolved_span` except for
+    with identical semantics to :func:`resolve_span` except for
     equal-start ties: DataFrame rows carry no document order, so ties
-    sort by ``(start, end)`` here, while :func:`resolved_span`
-    preserves the in-array order (the reference's stable sort).  Pass
-    ranges through the array form when tie order is semantic.
+    sort by ``(start, end)`` here, while :func:`resolve_span` keeps
+    the list order (the reference's stable sort).  Use the list form
+    when tie order is semantic.
 
-    Where :func:`resolved_span` folds an in-row array (right when a
+    Where :func:`resolve_span` folds one block's list (right when a
     record holds a handful of ranges, as EMBL CDS blocks do), this form
     sorts ranges with one hash-partitioned window and aggregates — no
     per-row array materialization, so a pathological record with

@@ -1,220 +1,308 @@
-"""Ordered-line sessionization (operators G1-G4).
+"""The per-file EMBL parse (operators F2-F7, G1-G4, P1-P8, A3/A4).
 
-The reference parses each EMBL file with a single-pass state machine
-(ena_build/parse_embl.py:444-570).  Relationally that machine is two
-nested sessionizations over an ordered line stream; here they are
-conditional running sums over ``Window.partitionBy(file).orderBy(line_no)``.
+The reference parses each EMBL file with one line-oriented state machine
+(ena_build/parse_embl.py:444-570).  Here the same machine runs inside
+one ``mapInArrow`` pass over the line scan:
 
-Scale note: one window partition = one file, which is exactly the
-reference's parallelism unit (one Dask task holds a handful of files —
-ena_build/dask_tasks.py:168-178).  EMBL files are "relatively small"
-(reference README.md:48), so a per-file partition fits executor memory;
-AQE handles stragglers.  All downstream group-bys key on
-``(file, record_idx, block_idx)`` which only ever *refines* the window
-partitioning.
+* the JVM keeps only ``ID``/``FT``/``OC`` lines (F2) and ``coalesce``s
+  the scan to at most ``defaultParallelism`` partitions;
+* gzip cannot be split, so each member is one read split and a scan
+  partition holds whole files in line order; ``coalesce`` only
+  concatenates partitions, so each file's lines reach the pass
+  contiguous and in order, and the machine resets when ``file``
+  changes;
+* the pass emits one row per record (G1: P1 header, F3-F6 reject
+  reason) and one row per CDS block (G2: P5-P8 with F7, the G4 ordinal
+  and the A3/A4 span resolved against its record).
+
+Why ``coalesce``: every Python task pays a fixed worker set-up (about
+0.15 CPU-s on a 4-core host, most of it pyspark's per-task
+``importlib.invalidate_caches()``), whatever it processes.  Mapping all
+50 scan partitions of a 250-file corpus made the build slower than the
+windowed parser it replaces (perfbench ``embl_sequence_rejects``: 16.1
+CPU-s against 3.3 with the ``coalesce``); at most
+``defaultParallelism`` tasks keep every core busy.  ``coalesce(n)`` is
+a no-op on a scan with fewer partitions.
+
+``segment_lines`` is the pass; ``extract_records`` and
+``extract_cds_blocks`` are projections of its output.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import re
+from collections.abc import Iterator
+
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ena_database_build_spark.functions import embl as E
+from ena_database_build_spark.functions.locations import parse_ranges, resolve_span
+
+# Record rows have a NULL block_idx.  Block rows carry their record's
+# ena_id and chr_struct only when the record is accepted (NULL otherwise);
+# their reject_reason is the block's own.
+_STRINGS = ArrayType(StringType())
+PARSED_SCHEMA = StructType(
+    [
+        StructField(name, dtype)
+        for name, dtype in [
+            ("file", StringType()),
+            ("record_idx", LongType()),
+            ("block_idx", LongType()),
+            ("ena_id", StringType()),
+            ("chr_struct", IntegerType()),
+            ("locus_num", IntegerType()),
+            ("direction", IntegerType()),
+            ("start", LongType()),
+            ("end", LongType()),
+            ("protein_ids", _STRINGS),
+            ("uniprot_ids", _STRINGS),
+            ("reject_reason", StringType()),
+        ]
+    ]
+)
+_ARROW_SCHEMA = to_arrow_schema(PARSED_SCHEMA)
+INT64_MAX = 2**63 - 1
+
+# The Column patterns of functions/embl.py; re.ASCII makes \d, \w and \s
+# the ASCII classes Java regex uses.  One difference stays: Java's `.`
+# also stops at \r, U+0085, U+2028 and U+2029, Python's only at \n, and
+# the pass follows the reference's Python re.
+_ID = re.compile(E.ID_LINE_PATTERN, re.ASCII).match
+_FT_START = re.compile(E.FT_START_PATTERN, re.ASCII).match
+_PROTEIN_ID = re.compile(E.PROTEIN_ID_PATTERN, re.ASCII).match
+_UNIPROT_ID = re.compile(E.UNIPROT_XREF_PATTERN, re.ASCII).match
+
+
+# --- line classifiers (the Column forms live in functions/embl.py) ---------
+
+def parse_id(line: str) -> tuple[str, int, int, str | None]:
+    """P1 + F4/F5: ``(ena_id, chr_struct, chr_len, reject_reason)`` with
+    the dead-letter encoding ``('', -1, 0, reason)``."""
+    m = _ID(line)
+    if m is None:
+        return "", -1, 0, "ill_formatted_id"
+    ena_id, topology, length = m.groups()
+    if topology not in ("linear", "circular"):
+        return "", -1, 0, "unknown_topology"
+    chr_len = int(length)
+    if chr_len > INT64_MAX:
+        return "", -1, 0, "chr_len_out_of_range"
+    return ena_id, int(topology == "linear"), chr_len, None
+
+
+def is_feature_start(line: str) -> bool:
+    return _FT_START(line) is not None
+
+
+def is_drop_taxonomy_line(line: str) -> bool:
+    return (
+        line.startswith("OC   ") and "Eukaryota" in line and " Fungi" not in line
+    )
+
+
+def protein_id(line: str) -> str | None:
+    m = _PROTEIN_ID(line)
+    return m and m.group(1)
+
+
+def uniprot_id(line: str) -> str | None:
+    m = _UNIPROT_ID(line)
+    return m and m.group(1)
+
+
+def location_string(parts: list[str]) -> str:
+    """P7: a CDS's location lines joined, cut at the first ``/`` and
+    stripped of ``FT ``/``CDS ``/newlines/spaces (parse_embl.py:129-132)."""
+    out = "\n".join(parts).partition("/")[0]
+    for sub in ("FT ", "CDS ", "\n", " "):
+        out = out.replace(sub, "")
+    return out
+
+
+# --- the state machine --------------------------------------------------------
+
+class _FileParser:
+    """The reference state machine over one file's F2-kept lines, fed in
+    line order; finished rows go to ``out`` as ``PARSED_SCHEMA`` tuples.
+
+    ``record_idx`` counts the file's ID lines and ``block_idx`` its
+    feature-start lines (G1/G2, parse_embl.py:494-559).  A CDS block is
+    opened by an ``FT   CDS `` feature start inside a record and closed
+    by the next feature start or ID line; its head and ``FT    ``
+    continuation lines up to the first ``/`` form the location (P6/P7),
+    and every such line may carry an xref (P2).  Lines before the first
+    ID line belong to no record.
+    """
+
+    def __init__(self, file: str, out: list):
+        self.file, self.out = file, out
+        self.record_idx = self.block_idx = 0
+        # [ena_id, chr_struct, chr_len, reason, fungi_dropped, loci, blocks]
+        self.record = None
+        # [block_idx, location parts, past the first "/", protein ids, uniprot ids]
+        self.block = None
+
+    def feed(self, lines: list[str]) -> None:
+        record, block = self.record, self.block
+        for line in lines:
+            kind = line[0]
+            if kind == "F":
+                if line[5:6] == " ":  # "FT    " continuation
+                    if block is None:
+                        continue
+                    if not block[2]:
+                        loc, slash, _ = line.partition("/")
+                        block[1].append(loc)
+                        block[2] = slash == "/"
+                    if "/" in line:
+                        if (x := protein_id(line)) is not None:
+                            block[3][x] = None
+                        elif (x := uniprot_id(line)) is not None:
+                            block[4][x] = None
+                elif is_feature_start(line):
+                    self.block_idx += 1
+                    if block is not None:
+                        self._close_block(block)
+                    block = None
+                    if record is not None and line.startswith("FT   CDS "):
+                        loc, slash, _ = line.partition("/")
+                        block = [self.block_idx, [loc], slash == "/", {}, {}]
+            elif kind == "I":
+                if block is not None:
+                    self._close_block(block)
+                    block = None
+                if record is not None:
+                    self._close_record()
+                self.record_idx += 1
+                record = self.record = [*parse_id(line), False, 0, []]
+            elif record is not None and is_drop_taxonomy_line(line):
+                record[4] = True  # F3 voids the whole record
+        self.record, self.block = record, block
+
+    def close(self) -> None:
+        if self.block is not None:
+            self._close_block(self.block)
+            self.block = None
+        if self.record is not None:
+            self._close_record()
+            self.record = None
+
+    def _close_block(self, block: list) -> None:
+        """F7 + G4: a block with no ``x..y`` range gets no ordinal."""
+        block_idx, parts, _, pids, uids = block
+        record = self.record
+        loc = location_string(parts)
+        ranges = parse_ranges(loc)
+        locus_num, reason = None, None
+        if not ranges:
+            reason = "unparseable_cds_location"
+        else:
+            # the reference (Python ints) parses any length, so a block
+            # past int64 keeps its ordinal but is rejected here
+            record[5] += 1
+            locus_num = record[5]
+            if max(map(max, ranges)) > INT64_MAX:
+                reason = "cds_location_out_of_range"
+        direction = 0 if "complement" in loc else 1
+        record[6].append(
+            (block_idx, locus_num, direction, ranges, list(pids), list(uids), reason)
+        )
+
+    def _close_record(self) -> None:
+        ena_id, chr_struct, chr_len, reason, fungi_dropped, _, blocks = self.record
+        if fungi_dropped:
+            reason = "non_fungi_eukaryote"
+        file, record_idx, out = self.file, self.record_idx, self.out
+        out.append((file, record_idx, None, ena_id, chr_struct,
+                    None, None, None, None, None, None, reason))
+        live = reason is None
+        for block_idx, locus_num, direction, ranges, pids, uids, why in blocks:
+            if live and why is None:
+                start, end = resolve_span(ranges, chr_struct, chr_len)
+                out.append((file, record_idx, block_idx, ena_id, chr_struct,
+                            locus_num, direction, start, end, pids, uids, None))
+            else:
+                out.append((file, record_idx, block_idx, None, None,
+                            locus_num, direction, None, None, pids, uids, why))
+
+
+def _to_batch(rows: list) -> pa.RecordBatch:
+    columns = list(zip(*rows))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(columns, _ARROW_SCHEMA)],
+        schema=_ARROW_SCHEMA,
+    )
+
+
+def _parse_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """``mapInArrow`` body: (file, line) batches in scan order -> parsed
+    rows, one state machine per run of equal ``file``."""
+    parser, out = None, []
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        files = batch.column(0)
+        # to_numpy().tolist() builds the str list ~9x faster than to_pylist()
+        lines = batch.column(1).to_numpy(zero_copy_only=False).tolist()
+        # run starts: row 0 and every row whose file differs from the last
+        changed = pc.not_equal(files.slice(1), files.slice(0, n - 1))
+        starts = [0, *(i + 1 for i in pc.indices_nonzero(changed).to_pylist()), n]
+        for s, e in zip(starts, starts[1:]):
+            file = files[s].as_py()
+            if parser is None or parser.file != file:
+                if parser is not None:
+                    parser.close()
+                parser = _FileParser(file, out)
+            parser.feed(lines[s:e])
+        if out:
+            yield _to_batch(out)
+            out.clear()
+    if parser is not None:
+        parser.close()
+        if out:
+            yield _to_batch(out)
 
 
 def segment_lines(embl_lines: DataFrame) -> DataFrame:
-    """G1+G2: assign ``record_idx`` and ``block_idx`` to every retained line.
-
-    Input schema: ``file STRING, line_no LONG, line STRING`` (order pinned
-    by ``line_no``).  Output adds:
-
-    * ``record_idx`` — running count of ``ID   `` lines in the file; each
-      ID line opens a new record (G1, parse_embl.py:494-520).  Lines
-      before the first ID get 0 and belong to no record.
-    * ``block_idx`` — running count of feature-block-start lines (P4);
-      every feature start closes the previous block and opens a new one
-      (G2, parse_embl.py:545-559).  Because an ID line does not increment
-      ``block_idx``, blocks are keyed by (record_idx, block_idx) so a
-      stale block index can never leak across records.
-    """
-    w = (
-        Window.partitionBy("file")
-        .orderBy("line_no")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    line = F.col("line")
-    # The windows' file exchange, placed below the flags: the records and
-    # the blocks branch prune the flags and windows differently, so only
-    # this subtree is the same in both and Spark reuses its exchange (one
-    # scan, one line shuffle for both).
-    kept = embl_lines.where(E.is_interesting_line(line)).repartition("file")
-    flagged = kept.select(
-        "*",
-        E.is_id_line(line).alias("is_id"),
-        E.is_feature_start(line).alias("is_ft_start"),
-        (
-            (E.is_feature_start(line) | E.is_qualifier_continuation(line))
-            & line.contains("/")
-        )
-        .cast("int")
-        .alias("_has_slash"),
-    )
-    # all three running sums share one Window spec -> ONE window pass
-    # (chained withColumn would plan separate Window operators)
-    return flagged.select(
-        "*",
-        F.sum(F.col("is_id").cast("long")).over(w).alias("record_idx"),
-        F.sum(F.col("is_ft_start").cast("long")).over(w).alias("block_idx"),
-        F.sum("_has_slash").over(w).alias("_slash_cum"),
+    """The whole per-file parse: ``file, line`` rows (scan order, see
+    ``read_embl_lines``) -> one ``PARSED_SCHEMA`` row per record and per
+    CDS block."""
+    n = embl_lines.sparkSession.sparkContext.defaultParallelism
+    return (
+        embl_lines.where(E.is_interesting_line(F.col("line")))
+        .select("file", "line")
+        .coalesce(n)
+        .mapInArrow(_parse_partition, PARSED_SCHEMA)
     )
 
 
 def extract_records(segmented: DataFrame) -> DataFrame:
-    """Per-record header + taxonomy gate (P1, F3, F4, F5, F6).
-
-    Returns one row per (file, record_idx) with the parsed ID-line struct
-    flattened, plus ``fungi_dropped`` (F3: any OC line in the record names
-    Eukaryota without `` Fungi`` — parse_embl.py:527-535) and
-    ``reject_reason`` for the dead-letter channel.
-    """
-    # Only ID lines and record-voiding OC lines influence the record
-    # header — filter BEFORE the aggregation shuffle so it carries
-    # ~records-many rows, not every feature line of the corpus.
-    relevant = segmented.where(
-        F.col("is_id") | E.is_drop_taxonomy_line(F.col("line"))
-    ).withColumn(
-        "id_info",
-        F.when(F.col("is_id"), E.parse_id_line(F.col("line"))),
-    )
-    return (
-        relevant.where(F.col("record_idx") > 0)
-        .groupBy("file", "record_idx")
-        .agg(
-            # exactly one ID line per record_idx by construction
-            F.first("id_info", ignorenulls=True).alias("id_info"),
-            F.max(
-                E.is_drop_taxonomy_line(F.col("line")).cast("int")
-            ).alias("_fungi_drop"),
-        )
-        .select(
-            "file",
-            "record_idx",
-            F.col("id_info.ena_id").alias("ena_id"),
-            F.col("id_info.chr_struct").alias("chr_struct"),
-            F.col("id_info.chr_len").alias("chr_len"),
-            F.when(F.col("_fungi_drop") == 1, F.lit("non_fungi_eukaryote"))
-            .otherwise(F.col("id_info.reject_reason"))
-            .alias("reject_reason"),
-            (F.col("_fungi_drop") == 1).alias("fungi_dropped"),
-        )
+    """One row per (file, record_idx): the parsed ID line (P1) and
+    ``reject_reason`` (F3-F6) for the dead-letter channel."""
+    return segmented.where(F.col("block_idx").isNull()).select(
+        "file", "record_idx", "ena_id", "chr_struct", "reject_reason"
     )
 
 
 def extract_cds_blocks(segmented: DataFrame) -> DataFrame:
-    """G2 close-out: one row per CDS feature block, pre-digested.
-
-    A block belongs to a CDS iff its head line (the feature-start line
-    that opened it) starts with ``FT   CDS `` (P5, parse_embl.py:557).
-    Only the head line and ``FT    `` qualifier-continuation lines (P6,
-    parse_embl.py:564) enter the block's line buffer; anything else
-    inside the block span is ignored, matching the state machine's
-    fall-through.
-
-    Scale design: a buffered block line matters only as (a) part of the
-    location descriptor — the concatenation cut at the block's first
-    ``/`` (parse_embl.py:129) — or (b) an xref carrier (P2).  Both are
-    decided map-side here, over the same per-file sort the
-    segmentation window already established (no extra exchange): a
-    cumulative slash count per block marks post-qualifier lines, whose
-    text — including arbitrarily long ``/translation`` payloads — is
-    dropped BEFORE the block shuffle.  Only short location fragments
-    and extracted ids travel.
-
-    Output: ``file, record_idx, block_idx, first_line_no,
-    loc_parts ARRAY<STRING> (in line order), protein_ids, uniprot_ids``.
-    """
-    w = Window.partitionBy("file").orderBy("line_no")
-    line = F.col("line")
-    candidate = F.col("is_ft_start") | E.is_qualifier_continuation(line)
-    has_slash = F.col("_has_slash")
-    slash_cum = F.col("_slash_cum")  # computed in segment_lines' window pass
-    # slash count just before the current block's head line
-    block_base = F.last(
-        F.when(F.col("is_ft_start"), slash_cum - has_slash), ignorenulls=True
-    ).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    prior_slash = slash_cum - has_slash - block_base
-
-    pre = (
-        segmented.withColumn("_prior_slash", prior_slash)
-        .where(
-            (F.col("block_idx") > 0)
-            & (F.col("record_idx") > 0)
-            & candidate
-        )
-        .select(
-            "file",
-            "record_idx",
-            "block_idx",
-            "line_no",
-            "_prior_slash",
-            F.when(
-                F.col("_prior_slash") == 0,
-                F.when(
-                    line.contains("/"), F.substring_index(line, "/", 1)
-                ).otherwise(line),
-            ).alias("loc_part"),
-            E.protein_id(line).alias("protein_id"),
-            E.uniprot_id(line).alias("uniprot_id"),
-            (F.col("is_ft_start") & E.is_cds_head(line)).alias("is_cds_head"),
-            F.col("is_ft_start"),
-        )
-        .where(
-            (F.col("_prior_slash") == 0)
-            | F.col("protein_id").isNotNull()
-            | F.col("uniprot_id").isNotNull()
-        )
-        .drop("_prior_slash")
-    )
-    return (
-        pre.groupBy("file", "record_idx", "block_idx")
-        .agg(
-            F.min("line_no").alias("first_line_no"),
-            F.max(
-                F.when(F.col("is_ft_start"), F.col("is_cds_head"))
-            ).alias("_head_is_cds"),
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("loc_part").isNotNull(),
-                        F.struct("line_no", "loc_part"),
-                    )
-                )
-            ).alias("_ordered"),
-            F.collect_set("protein_id").alias("protein_ids"),
-            F.collect_set("uniprot_id").alias("uniprot_ids"),
-        )
-        .where(F.col("_head_is_cds"))
-        .select(
-            "file",
-            "record_idx",
-            "block_idx",
-            "first_line_no",
-            F.transform(F.col("_ordered"), lambda s: s["loc_part"]).alias(
-                "loc_parts"
-            ),
-            "protein_ids",
-            "uniprot_ids",
-        )
-    )
-
-
-def number_loci(parsed_blocks: DataFrame) -> DataFrame:
-    """G4: assign ``locus_num`` = 1-based ordinal of *successfully parsed*
-    CDS blocks within a record, in block order (quirk SURVEY.md §2.10.4:
-    failed blocks — F7 — are dropped before numbering, reference
-    parse_embl.py:150-154 returns before the count increment at :190).
-
-    Input must already be filtered to blocks with >=1 location range.
-    """
-    w = Window.partitionBy("file", "record_idx").orderBy("first_line_no")
-    return parsed_blocks.withColumn("locus_num", F.row_number().over(w))
+    """One row per CDS block of every record: ``locus_num`` (G4, NULL
+    when F7 drops the block), ``direction`` (P8), the resolved span
+    (A3/A4) and the xref sets (P2, A1).  ``ena_id``/``chr_struct``/span
+    are NULL on blocks of rejected records; ``reject_reason`` is the
+    block's own (``unparseable_cds_location`` or
+    ``cds_location_out_of_range``)."""
+    return segmented.where(F.col("block_idx").isNotNull())

@@ -409,8 +409,8 @@ def q_p3_range_extract(spark, sf_dir):
         F.lit("..>"),
         (F.col("l_linenumber") * 100 + 50).cast("string"),
     )
-    # explode-first relational form (same regex/semantics as the
-    # array-form location_ranges; endpoint split stays codegen'd)
+    # explode-first relational form (same regex/semantics as
+    # locations.parse_ranges; endpoint split stays codegen'd)
     return explode_ranges(
         li.withColumn("_loc", loc), F.col("_loc"), "l_orderkey", "l_linenumber"
     )
@@ -882,8 +882,8 @@ def q_f7_unparseable_cds_drop(spark, sf_dir):
         )
         .otherwise(a)  # single base position: no range -> unparseable
     )
-    # has_range == size(location_ranges(loc)) > 0 (same pattern; the
-    # equivalence is pinned in tests) without the struct build
+    # has_range == len(parse_ranges(loc)) > 0 (same pattern; the
+    # equivalence is pinned in tests) without extracting the ranges
     good = li.where(has_range(loc))
     w = Window.partitionBy("l_orderkey").orderBy("l_linenumber")
     return good.select(

@@ -3,14 +3,18 @@
 Reference semantics (ena_build/parse_embl.py:444-570 +
 mysql_database.py:50-134) re-expressed Spark-first:
 
-    embl_lines ─ G1/G2 windows ─┬─ records  (P1, F3-F6)
-                                └─ cds blocks (P5/P6) ─ P7/P3/P8 ─ F7
+    embl_lines ─ F2 prefix filter ─ coalesce ─ per-file parse (mapInArrow)
                                         │
-                 records ⋈ blocks ─ A3/A4 span ─ G4 ordinals ─ A1 sets
+        ┌─ records (P1, F3-F6)          ├─ cds blocks: P5-P8, F7, G4
+        │                               │   ordinals, A3/A4 spans, A1 sets
+        └─ rejected_records             ├─ rejected_blocks
                                         │
                  explode protein_ids ⋈ idmapping (J1) ─ A-collect
                                         │
                  J3 fallback-coalesce ─ O1 explode ─ O2 project → ena_tab
+
+The parse is one Python pass per file (``operators/segmentation.py``);
+everything after it stays in Catalyst.
 
 Pinned quirks (SURVEY.md §2.10): 1=linear encoding, strict-> circular
 gap tie-break, end<start legal, ordinals skip failed blocks, lenient
@@ -25,12 +29,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ena_database_build_spark.functions import embl as E
-from ena_database_build_spark.functions.locations import (
-    has_range,
-    location_ranges,
-    resolved_span,
-)
 from ena_database_build_spark.operators import segmentation as S
 from ena_database_build_spark.sources.idmapping import normalize_idmapping
 
@@ -48,8 +46,8 @@ ENA_TAB_COLUMNS = [
 @dataclass
 class EnaBuildResult:
     """The pipeline's output channels, each still lazy, all derived from
-    the one ``segmented`` line table (persist it before running several
-    of them as separate actions)."""
+    the one ``segmented`` parse (persist it before running several of
+    them as separate actions)."""
 
     segmented: DataFrame
     ena_tab: DataFrame
@@ -57,75 +55,20 @@ class EnaBuildResult:
     rejected_blocks: DataFrame
 
 
-def _extract(segmented: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """G1/G2 close-out: per-record headers and CDS blocks with their
-    location string (P7).
-
-    Both branches read the same ``segmented`` table, but column pruning
-    cuts ``segment_lines`` down to a different ``Window`` in each, so
-    the only subtree they share is the file exchange below its flags.
-    Spark reuses that exchange (``ReusedExchange``): the lines are
-    scanned and shuffled once for both branches.
-    """
-    records = S.extract_records(segmented)
-    blocks = S.extract_cds_blocks(segmented).withColumn(
-        "loc_str", E.cds_location_string(F.col("loc_parts"))
-    )
-    return records, blocks
-
-
-def _join_loci(records: DataFrame, blocks: DataFrame) -> DataFrame:
-    """records+blocks -> loci with resolved spans and per-locus id sets."""
-    live_records = records.where(
-        F.col("reject_reason").isNull() & (F.col("ena_id") != "")
-    )
-    # F7: blocks with no x..y range are dropped *before* ordinal
-    # assignment (quirk §2.10.4) and contribute no xrefs at all.
-    parsed = blocks.withColumn("loc_ranges", location_ranges(F.col("loc_str")))
-    numbered = S.number_loci(parsed.where(F.size("loc_ranges") > 0))
-
-    # A1: per-locus xref sets were already collect_set'd map-side in
-    # extract_cds_blocks.
-    with_ids = numbered.select(
-        "file",
-        "record_idx",
-        "locus_num",
-        "first_line_no",
-        "loc_str",
-        "loc_ranges",
-        E.strand_direction(F.col("loc_str")).alias("direction"),
-        "uniprot_ids",
-        "protein_ids",
-    )
-
-    # Record join is 1:N on (file, record_idx), hint-free: at corpus
-    # scale the record-header relation (one row per chromosome) can
-    # reach GBs, so AQE decides from runtime sizes.
-    joined = with_ids.join(live_records, ["file", "record_idx"])
-
-    return joined.select(
-        "file",
-        "record_idx",
-        "ena_id",
-        "chr_struct",
-        "chr_len",
-        "locus_num",
-        "direction",
-        resolved_span(
-            F.col("loc_ranges"), F.col("chr_struct"), F.col("chr_len")
-        ).alias("span"),
-        "uniprot_ids",
-        "protein_ids",
+def _loci(blocks: DataFrame) -> DataFrame:
+    """The parsed CDS blocks of accepted records: one row per locus with
+    its resolved span and xref sets."""
+    return blocks.where(
+        F.col("reject_reason").isNull() & F.col("ena_id").isNotNull()
     ).select(
         "file",
         "record_idx",
         "ena_id",
         "chr_struct",
-        "chr_len",
         "locus_num",
         "direction",
-        F.col("span.start").alias("start"),
-        F.col("span.end").alias("end"),
+        "start",
+        "end",
         "uniprot_ids",
         "protein_ids",
     )
@@ -134,14 +77,14 @@ def _join_loci(records: DataFrame, blocks: DataFrame) -> DataFrame:
 def parse_loci(
     embl_lines: DataFrame, segmented: DataFrame | None = None
 ) -> DataFrame:
-    """records+blocks -> loci with resolved spans and per-locus id sets.
+    """Loci with resolved spans and per-locus id sets.
 
     Pass ``segmented`` to build on an existing ``segment_lines`` result
-    instead of re-segmenting ``embl_lines``.
+    instead of parsing ``embl_lines`` again.
     """
     if segmented is None:
         segmented = S.segment_lines(embl_lines)
-    return _join_loci(*_extract(segmented))
+    return _loci(S.extract_cds_blocks(segmented))
 
 
 def resolve_uniprot_ids(loci: DataFrame, idmapping: DataFrame) -> DataFrame:
@@ -167,9 +110,8 @@ def resolve_uniprot_ids(loci: DataFrame, idmapping: DataFrame) -> DataFrame:
 
     # Single consumption of `loci`: explode the protein-id set
     # (explode_outer keeps protein-less loci alive for the fallback),
-    # join the mapping, and fold back to locus grain.  The group-by
-    # keys extend the pipeline's file-prefixed partitioning, so with a
-    # broadcast mapping this whole step adds ZERO exchanges.
+    # join the mapping, and fold back to locus grain (one exchange on
+    # the locus key; the mapping join adds its own unless broadcast).
     exploded = loci.select(
         *loci.columns, F.explode_outer("protein_ids").alias("foreign_id")
     )
@@ -209,31 +151,24 @@ def _project_ena_tab(resolved: DataFrame) -> DataFrame:
 
 
 def build_all(embl_lines: DataFrame, idmapping: DataFrame) -> EnaBuildResult:
-    """The whole lineage, segmented and extracted once: ``ena_tab`` and
-    the dead-letter channels (SURVEY.md §4.3: the reference
-    print-and-skips malformed rows; we surface them as filterable
-    DataFrames instead) all read the same records and blocks.
+    """The whole lineage, parsed once: ``ena_tab`` and the dead-letter
+    channels (SURVEY.md §4.3: the reference print-and-skips malformed
+    rows; we surface them as filterable DataFrames instead) all read the
+    same records and blocks.
 
     ``ena_tab`` grain: one row per (locus, resolved uniprot id list
     element); duplicates across overlapping input files are preserved
     (quirk §2.10.8 — the reference never dedups globally).
     """
     segmented = S.segment_lines(embl_lines)
-    records, blocks = _extract(segmented)
-    ena_tab = _project_ena_tab(
-        resolve_uniprot_ids(_join_loci(records, blocks), idmapping)
-    )
+    records = S.extract_records(segmented)
+    blocks = S.extract_cds_blocks(segmented)
+    ena_tab = _project_ena_tab(resolve_uniprot_ids(_loci(blocks), idmapping))
     rejected_records = records.where(F.col("reject_reason").isNotNull()).select(
         "file", "record_idx", "reject_reason"
     )
-    # the dead-letter gate only asks "no x..y range at all" — the
-    # pattern-match predicate, not the full parse (locations.has_range
-    # is pinned equivalent to size(location_ranges(s)) == 0 negated)
-    rejected_blocks = blocks.where(~has_range(F.col("loc_str"))).select(
-        "file",
-        "record_idx",
-        "block_idx",
-        F.lit("unparseable_cds_location").alias("reject_reason"),
+    rejected_blocks = blocks.where(F.col("reject_reason").isNotNull()).select(
+        "file", "record_idx", "block_idx", "reject_reason"
     )
     return EnaBuildResult(segmented, ena_tab, rejected_records, rejected_blocks)
 

@@ -40,8 +40,10 @@ def read_embl_lines(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     partition, and every admitted file is one read split (the
     ``*.dat.gz`` glob admits only non-splittable gzip members), so a
     file's ``line_no`` values are ascending in line order.  They are
-    neither dense nor file-relative; consumers only order by them
-    within a file.
+    neither dense nor file-relative.  The per-file parse
+    (``operators/segmentation.py``) relies on that same scan order
+    directly: a partition yields each of its files whole, in line
+    order.
     """
     if isinstance(paths, str):
         paths = [paths]

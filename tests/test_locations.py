@@ -3,15 +3,17 @@
 Case data is the behavior spec pinned by the reference's suites
 (tests/location_parsing_test.py:17-119 — 26 parametrized cases with
 chromosome_length=1000, encoding 1=linear/0=circular — and
-tests/regex_test.py:59-95 — 15 location strings).
+tests/regex_test.py:59-95 — 15 location strings).  ``parse_ranges`` and
+``resolve_span`` are what the per-file parse calls; the Column forms
+(``has_range``, ``explode_ranges``, ``resolved_span_relational``) are
+pinned to agree with them.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 from ena_database_build_spark.functions.locations import (
-    location_ranges,
-    resolved_span,
+    parse_ranges,
+    resolve_span,
 )
 
 LINEAR = 1
@@ -78,29 +80,9 @@ SPAN_CASES = [
 ]
 
 
-def test_resolved_span_goldens(spark):
-    rows = [
-        (case_id, [{"start": s, "end": e} for s, e in ranges], struct, exp_s, exp_e)
-        for case_id, ranges, struct, (exp_s, exp_e) in SPAN_CASES
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "case_id string, loc_ranges array<struct<start:long,end:long>>, "
-        "chr_struct int, expected_start long, expected_end long",
-    )
-    out = df.select(
-        "case_id",
-        "expected_start",
-        "expected_end",
-        resolved_span(
-            F.col("loc_ranges"), F.col("chr_struct"), F.lit(CHR_LEN)
-        ).alias("span"),
-    ).collect()
-    for row in out:
-        assert (row["span"]["start"], row["span"]["end"]) == (
-            row["expected_start"],
-            row["expected_end"],
-        ), row["case_id"]
+def test_resolved_span_goldens():
+    for case_id, ranges, struct, expected in SPAN_CASES:
+        assert resolve_span(ranges, struct, CHR_LEN) == expected, case_id
 
 
 LOCATION_STRING_CASES = [
@@ -125,29 +107,13 @@ LOCATION_STRING_CASES = [
 ]
 
 
-def test_location_ranges_goldens(spark):
-    df = spark.createDataFrame(
-        [(i, s) for i, (s, _) in enumerate(LOCATION_STRING_CASES)],
-        "i int, loc string",
-    )
-    got = {
-        r["i"]: [(x["start"], x["end"]) for x in r["ranges"]]
-        for r in df.select(
-            "i", location_ranges(F.col("loc")).alias("ranges")
-        ).collect()
-    }
-    for i, (loc, expected) in enumerate(LOCATION_STRING_CASES):
-        assert got[i] == expected, loc
+def test_location_ranges_goldens():
+    for loc, expected in LOCATION_STRING_CASES:
+        assert parse_ranges(loc) == expected, loc
 
 
-def test_resolved_span_null_on_empty(spark):
-    df = spark.createDataFrame(
-        [(1, [])], "i int, loc_ranges array<struct<start:long,end:long>>"
-    )
-    row = df.select(
-        resolved_span(F.col("loc_ranges"), F.lit(1), F.lit(100)).alias("span")
-    ).collect()[0]
-    assert row["span"] is None
+def test_resolved_span_null_on_empty():
+    assert resolve_span([], 1, 100) is None
 
 
 def test_resolved_span_relational_matches_goldens(spark):
@@ -176,13 +142,10 @@ def test_resolved_span_relational_matches_goldens(spark):
 
 
 def test_explode_ranges_matches_array_form(spark):
-    """The exploded relational form and the array form must extract
+    """The exploded relational form and ``parse_ranges`` must extract
     identical ranges from identical strings (same regex, same '>'
     stripping), including no-match and NULL rows producing nothing."""
-    from ena_database_build_spark.functions.locations import (
-        explode_ranges,
-        location_ranges,
-    )
+    from ena_database_build_spark.functions.locations import explode_ranges
 
     rows = [
         (1, "1..>888,12..34"),
@@ -192,25 +155,20 @@ def test_explode_ranges_matches_array_form(spark):
         (5, "7..8"),
     ]
     df = spark.createDataFrame(rows, "id long, loc string")
-    via_array = (
-        df.select("id", F.explode(location_ranges(F.col("loc"))).alias("r"))
-        .select("id", F.col("r.start").alias("range_start"), F.col("r.end").alias("range_end"))
-        .collect()
-    )
+    via_python = [
+        (i, s, e) for i, loc in rows for s, e in parse_ranges(loc or "")
+    ]
     via_explode = explode_ranges(df, F.col("loc"), "id").collect()
-    assert sorted(map(tuple, via_array)) == sorted(map(tuple, via_explode))
+    assert sorted(via_python) == sorted(map(tuple, via_explode))
     assert {r["id"] for r in via_explode} == {1, 2, 5}
 
 
 def test_has_range_equals_nonempty_parse(spark):
-    """has_range must be definitionally size(location_ranges(s)) > 0 —
+    """has_range must be definitionally len(parse_ranges(s)) > 0 —
     checked over strings covering every parse edge the extractor has
     goldens for (no-range single base, partial marker, multi-range,
     NULL, empty, bare dots)."""
-    from ena_database_build_spark.functions.locations import (
-        has_range,
-        location_ranges,
-    )
+    from ena_database_build_spark.functions.locations import has_range
 
     vals = [
         "123", "1..2", "1..>2", "..", "a..b", "", None,
@@ -218,10 +176,6 @@ def test_has_range_equals_nonempty_parse(spark):
         "12..x", "x..12", "0..0",
     ]
     df = spark.createDataFrame([(v,) for v in vals], "loc string")
-    got = df.select(
-        "loc",
-        has_range(F.col("loc")).alias("h"),
-        (F.size(location_ranges(F.col("loc"))) > 0).alias("p"),
-    ).collect()
+    got = df.select("loc", has_range(F.col("loc")).alias("h")).collect()
     for r in got:
-        assert bool(r["h"] or False) == bool(r["p"] or False), r["loc"]
+        assert bool(r["h"] or False) == bool(parse_ranges(r["loc"] or "")), r["loc"]

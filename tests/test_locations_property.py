@@ -1,8 +1,9 @@
 """Property-based check of the span resolvers.
 
 Hypothesis generates arbitrary range multisets (including malformed
-``end < start`` inputs and duplicate/overlapping ranges); both Spark
-resolvers must agree with an independent Python model of the
+``end < start`` inputs and duplicate/overlapping ranges); the per-file
+parse's ``resolve_span`` and the relational Spark resolver must agree
+with an independent Python model of the
 documented algorithm (SURVEY.md §2.5 A3/A4: linear = min/max over
 flattened endpoints; circular = sort by (start, end), largest inner
 gap strictly greater than the wrap gap marks the origin crossing,
@@ -10,10 +11,9 @@ first occurrence wins).
 """
 
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from ena_database_build_spark.functions.locations import (
-    resolved_span,
+    resolve_span,
     resolved_span_relational,
 )
 
@@ -21,8 +21,8 @@ CHR_LEN = 1000
 
 
 def span_model(ranges, chr_struct, chr_len=CHR_LEN, stable_by_start=True):
-    """``stable_by_start=True`` models the reference's (and the array
-    resolver's) stable sort on start; ``False`` models the relational
+    """``stable_by_start=True`` models the reference's (and
+    ``resolve_span``'s) stable sort on start; ``False`` models the relational
     resolver's (start, end) tie order."""
     if chr_struct != 0:
         flat = [v for r in ranges for v in r]
@@ -49,22 +49,9 @@ case_strategy = st.tuples(
 @settings(max_examples=8, deadline=None)
 @given(st.lists(case_strategy, min_size=1, max_size=40))
 def test_resolvers_match_model(spark, cases):
-    rows = [
-        (i, [{"start": s, "end": e} for s, e in ranges], struct)
+    got_list = {
+        i: resolve_span([tuple(r) for r in ranges], struct, CHR_LEN)
         for i, (ranges, struct) in enumerate(cases)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "case_id int, loc_ranges array<struct<start:long,end:long>>, chr_struct int",
-    )
-    got_arr = {
-        r["case_id"]: (r["span"]["start"], r["span"]["end"])
-        for r in df.select(
-            "case_id",
-            resolved_span(
-                F.col("loc_ranges"), F.col("chr_struct"), F.lit(CHR_LEN)
-            ).alias("span"),
-        ).collect()
     }
     flat_rows = [
         (i, struct, s, e)
@@ -84,5 +71,5 @@ def test_resolvers_match_model(spark, cases):
         tups = [tuple(r) for r in ranges]
         want_arr = span_model(tups, struct, stable_by_start=True)
         want_rel = span_model(tups, struct, stable_by_start=False)
-        assert got_arr[i] == want_arr, (i, ranges, struct)
+        assert got_list[i] == want_arr, (i, ranges, struct)
         assert got_rel[i] == want_rel, (i, ranges, struct)

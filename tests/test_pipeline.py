@@ -88,20 +88,26 @@ def test_build_all_builds_each_stage_once(monkeypatch, spark, corpus, idmapping_
     }
 
 
-def _file_scans(node):
-    """FileSourceScanExec nodes of an executed (adaptive) plan."""
+def _plan_nodes(node):
+    """Nodes of an executed (adaptive) plan, through its query stages."""
     name = node.getClass().getSimpleName()
     if name == "AdaptiveSparkPlanExec":
-        yield from _file_scans(node.executedPlan())
+        yield from _plan_nodes(node.executedPlan())
         return
     if name.endswith("QueryStageExec"):
-        yield from _file_scans(node.plan())
+        yield from _plan_nodes(node.plan())
         return
-    if name == "FileSourceScanExec":
-        yield node
+    yield node
     children = node.children()
     for i in range(children.size()):
-        yield from _file_scans(children.apply(i))
+        yield from _plan_nodes(children.apply(i))
+
+
+def _file_scans(node):
+    """FileSourceScanExec nodes of an executed (adaptive) plan."""
+    for n in _plan_nodes(node):
+        if n.getClass().getSimpleName() == "FileSourceScanExec":
+            yield n
 
 
 def test_dropped_division_files_are_never_opened(spark, corpus):
@@ -167,17 +173,25 @@ def test_tsv_sink_roundtrip(spark, corpus, idmapping_df, tmp_path):
     }
 
 
-def test_line_no_orders_each_files_lines(spark, tmp_path):
+COPIES = 12
+
+
+@pytest.fixture(scope="module")
+def copies(tmp_path_factory):
+    root = tmp_path_factory.mktemp("ena_copies")
+    for k in range(COPIES):
+        _write(root / f"copy{k:02d}", FILES)
+    return root
+
+
+def test_line_no_orders_each_files_lines(spark, copies):
     """Sorted by ``line_no``, each file's lines are its own gunzipped
     lines, also when the scan packs several files into one partition."""
-    copies = 12
-    for k in range(copies):
-        _write(tmp_path / f"copy{k:02d}", FILES)
-    lines = read_embl_lines(spark, str(tmp_path))
+    lines = read_embl_lines(spark, str(copies))
     by_file = {}
     for r in lines.collect():
         by_file.setdefault(r["file"], []).append((r["line_no"], r["line"]))
-    assert len(by_file) == copies * (len(FILES) - 1)
+    assert len(by_file) == COPIES * (len(FILES) - 1)
     assert lines.rdd.getNumPartitions() < len(by_file)
     for file, rows in by_file.items():
         with gzip.open(file.removeprefix("file://"), "rt") as f:
@@ -194,3 +208,134 @@ def test_universal_newlines(spark, tmp_path, idmapping_df):
     _write(tmp_path, {rel: FILES[rel] for rel in rels[2:]})
     tab = P.build_ena_tab(read_embl_lines(spark, str(tmp_path)), idmapping_df)
     assert _rows(tab.select(P.ENA_TAB_COLUMNS)) == sorted(EXPECTED_ENA_TAB)
+
+
+# (file, record_idx[, block_idx], reject_reason) per copy of FILES
+REJECTED_RECORDS = [
+    ("sequence/pro/rel_std_PRO_01_r138.dat.gz", "1", "non_fungi_eukaryote"),
+    ("sequence/pro/rel_std_PRO_01_r138.dat.gz", "3", "unknown_topology"),
+    ("sequence/pro/rel_std_PRO_01_r138.dat.gz", "4", "ill_formatted_id"),
+]
+REJECTED_BLOCKS = [
+    ("wgs/public/abz/ABZA01.dat.gz", "3", "6", "unparseable_cds_location"),
+]
+
+
+def _dead_letters(df, root):
+    """Multiset of a dead-letter channel, ``file`` relative to its copy."""
+    prefix = f"file://{root}/"
+    return Counter(
+        (r[0].removeprefix(prefix).split("/", 1)[1], *map(str, r[1:]))
+        for r in df.collect()
+    )
+
+
+def test_parse_over_many_files_and_batches(spark, copies, idmapping_df):
+    """More scan partitions than cores, and Arrow batches far smaller
+    than a file, so file boundaries fall inside and across batches:
+    every channel still equals the golden once per copy."""
+    lines = read_embl_lines(spark, str(copies))
+    assert lines.rdd.getNumPartitions() > spark.sparkContext.defaultParallelism
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        res = P.build_all(lines, idmapping_df)
+        tab = res.ena_tab.select(P.ENA_TAB_COLUMNS).collect()
+        records = _dead_letters(res.rejected_records, copies)
+        blocks = _dead_letters(res.rejected_blocks, copies)
+    finally:
+        spark.conf.set(key, old)
+    assert Counter(map(tuple, tab)) == Counter(
+        {row: n * COPIES for row, n in Counter(EXPECTED_ENA_TAB).items()}
+    )
+    assert records == Counter({r: COPIES for r in REJECTED_RECORDS})
+    assert blocks == Counter({b: COPIES for b in REJECTED_BLOCKS})
+
+
+def test_ena_tab_plan_is_one_python_pass(spark, copies, idmapping_df):
+    """No Window, one text scan, one Python map, and the stage that
+    reads the files (and runs the pass) has at most defaultParallelism
+    tasks although the scan has more partitions."""
+    sc = spark.sparkContext
+    lines = read_embl_lines(spark, str(copies))
+    assert lines.rdd.getNumPartitions() > sc.defaultParallelism
+    tab = P.build_all(lines, idmapping_df).ena_tab
+    group = "ena-tab-plan-pin"
+    sc.setJobGroup(group, group)
+    try:
+        tab.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    names = [
+        n.getClass().getSimpleName()
+        for n in _plan_nodes(tab._jdf.queryExecution().executedPlan())
+    ]
+    assert not [n for n in names if "Window" in n], names
+    scans = list(_file_scans(tab._jdf.queryExecution().executedPlan()))
+    assert len(scans) == 1 and "FileScan text" in scans[0].toString()
+    assert names.count("MapInArrowExec") == 1, names
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    stage_ids = {
+        sid
+        for j in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(j).stageIds
+    }
+    reading = [
+        store.lastStageAttempt(sid).numTasks()
+        for sid in stage_ids
+        if store.lastStageAttempt(sid).inputBytes() > 0
+    ]
+    assert len(reading) == 1
+    assert reading[0] <= sc.defaultParallelism
+
+
+def _overflow_build(spark, tmp_path, text, idmapping_df):
+    _write(tmp_path, {"wgs/public/big/BIG01.dat.gz": text})
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        res = P.build_all(read_embl_lines(spark, str(tmp_path)), idmapping_df)
+        return (
+            _rows(res.ena_tab),
+            sorted(tuple(r)[1:] for r in res.rejected_records.collect()),
+            sorted(tuple(r)[1:] for r in res.rejected_blocks.collect()),
+        )
+    finally:
+        spark.conf.set(key, old)
+
+
+OVERFLOW = "99999999999999999999"  # > 2**63 - 1
+
+
+def test_id_length_beyond_int64_rejects_the_record(spark, tmp_path, idmapping_df):
+    text = "\n".join([
+        f"ID   BIG0001; SV 1; linear; genomic DNA; WGS; PRO; {OVERFLOW} BP.",
+        "FT   CDS             1..50",
+        'FT                   /protein_id="AAA1.1"',
+        "ID   OK0001; SV 1; linear; genomic DNA; WGS; PRO; 1000 BP.",
+        "FT   CDS             10..20",
+        'FT                   /protein_id="AAA2.1"',
+        "",
+    ])
+    tab, records, blocks = _overflow_build(spark, tmp_path, text, idmapping_df)
+    assert tab == [("OK0001", "X1", 1, 1, 1, 10, 20)]
+    assert records == [(1, "chr_len_out_of_range")]
+    assert blocks == []
+
+
+def test_range_beyond_int64_rejects_the_block(spark, tmp_path, idmapping_df):
+    text = "\n".join([
+        "ID   RNG0001; SV 1; circular; genomic DNA; WGS; PRO; 1000 BP.",
+        f"FT   CDS             join(1..{OVERFLOW})",
+        'FT                   /protein_id="AAA1.1"',
+        "FT   CDS             10..20",
+        'FT                   /protein_id="AAA2.1"',
+        "",
+    ])
+    tab, records, blocks = _overflow_build(spark, tmp_path, text, idmapping_df)
+    # the reference parses the block (Python ints), so it keeps its ordinal
+    assert tab == [("RNG0001", "X1", 2, 0, 1, 10, 20)]
+    assert records == []
+    assert blocks == [(1, 1, "cds_location_out_of_range")]

@@ -2,11 +2,13 @@
 
 Generates ONE pathologically large gzipped EMBL member (default 400k
 records: 2.9M lines, ~125 MB of text, 11 MB gzip'd), runs the pipeline on
-it, and reports the output rows, the wall time and the JVM's peak RSS
-(VmHWM).  Ingest streams the member one row per line, so no row is ever
-member-sized; the peak RSS shows that the executor memory stays bounded
-on members far larger than the "relatively small" files the reference
-assumes (reference README.md:48).  ``tests/test_scale_probe.py`` pins
+it, and reports the output rows, the wall time and the peak RSS (VmHWM)
+of the JVM and of the Python workers that run the per-file parse.
+Ingest streams the member one row per line and the parse holds one
+record at a time, so no row or buffer is member-sized; the peak RSS
+shows that the executor memory stays bounded on members far larger
+than the "relatively small" files the reference assumes (reference
+README.md:48).  ``tests/test_scale_probe.py`` pins
 the output of the same record mix at 20k records.
 
 Usage: python tools/soak_probe.py [n_records]
@@ -70,27 +72,56 @@ def idmapping(spark):
     )
 
 
-def jvm_peak_rss_mb() -> float | None:
-    """VmHWM of the py4j-launched JVM (child java process), in MB."""
-    me = os.getpid()
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
+def _proc_tree() -> dict[int, list[int]]:
+    """ppid -> child pids of every live process."""
+    children: dict[int, list[int]] = {}
+    for pid in filter(str.isdigit, os.listdir("/proc")):
         try:
             with open(f"/proc/{pid}/stat") as f:
-                parts = f.read().split()
-            if int(parts[3]) != me:  # ppid
-                continue
-            with open(f"/proc/{pid}/comm") as f:
-                if f.read().strip() != "java":
-                    continue
-            with open(f"/proc/{pid}/status") as f:
-                for line in f:
-                    if line.startswith("VmHWM:"):
-                        return round(int(line.split()[1]) / 1024, 1)
-        except (OSError, ValueError):
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, ValueError, IndexError):
             continue
-    return None
+        children.setdefault(ppid, []).append(int(pid))
+    return children
+
+
+def _comm_and_peak_mb(pid: int) -> tuple[str, float]:
+    """A process's name and VmHWM (peak RSS) in MB."""
+    with open(f"/proc/{pid}/comm") as f:
+        comm = f.read().strip()
+    with open(f"/proc/{pid}/status") as f:
+        for line in f:
+            if line.startswith("VmHWM:"):
+                return comm, int(line.split()[1]) / 1024
+    return comm, 0.0
+
+
+def peak_rss_mb() -> tuple[float | None, float, int]:
+    """VmHWM of the py4j-launched JVM (child java process), and the
+    summed VmHWM of the Python processes under it (pyspark's daemon and
+    its workers) with their count, in MB.  Forked workers share pages
+    with the daemon, so the sum is an upper bound."""
+    tree = _proc_tree()
+    jvm, workers, n = None, 0.0, 0
+    for pid in tree.get(os.getpid(), []):
+        try:
+            comm, peak = _comm_and_peak_mb(pid)
+        except OSError:
+            continue
+        if comm != "java":
+            continue
+        jvm = round(peak, 1)
+        stack = list(tree.get(pid, []))
+        while stack:
+            child = stack.pop()
+            stack += tree.get(child, [])
+            try:
+                comm, peak = _comm_and_peak_mb(child)
+            except OSError:
+                continue
+            if comm.startswith("python"):
+                workers, n = workers + peak, n + 1
+    return jvm, round(workers, 1), n
 
 
 def main() -> None:
@@ -115,9 +146,11 @@ def main() -> None:
         st = time.perf_counter()
         out = P.build_ena_tab(read_embl_lines(spark, str(root)), idmapping(spark))
         n = out.count()
+        wall = time.perf_counter() - st
+        jvm, workers, n_workers = peak_rss_mb()
         print(
-            f"{n} output rows in {time.perf_counter() - st:.1f}s, "
-            f"JVM peak RSS: {jvm_peak_rss_mb()} MB"
+            f"{n} output rows in {wall:.1f}s, JVM peak RSS: {jvm} MB, "
+            f"Python workers' peak RSS: {workers} MB over {n_workers} processes"
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
