@@ -7,8 +7,10 @@ schedules Dask tasks.  Here the same surface wires the Spark lineage:
 
     read_embl_lines -> build_all -> write_ena_tab (+ dead letters)
 
-Like the reference, ingest streams every member line by line, whatever
-its size, so there is no ingest option.
+Like the reference, each member is opened by one worker and streamed
+line by line, whatever its size, so there is no ingest option; a member
+whose gzip stream is cut or corrupt becomes a dead letter instead of
+failing the build.
 
 Scheduler knobs (``--scheduler-file``/``--n-workers``) become the Spark
 master URL and shuffle-partition count; ``--local-scratch`` maps to
@@ -44,8 +46,8 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         "--ena-paths",
         required=True,
         nargs="+",
-        help="directory roots searched recursively for *.dat.gz EMBL "
-        "files; each file is streamed line by line, whatever its size",
+        help="local directory roots searched recursively for *.dat.gz "
+        "EMBL files; each file is streamed line by line, whatever its size",
     )
     parser.add_argument(
         "--output-dir",
@@ -97,7 +99,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     parser.add_argument(
         "--rejects-dir",
         default=None,
-        help="also write the dead-letter channels (rejected records/blocks)",
+        help="also write the dead-letter channels (records, blocks, files)",
     )
     args = parser.parse_args(argv)
     if args.db_config and not args.db_name:
@@ -128,18 +130,18 @@ def main(argv: list[str] | None = None) -> None:
         master=args.master,
         shuffle_partitions=args.shuffle_partitions,
     )
-    lines = read_embl_lines(spark, args.ena_paths)
+    members = read_embl_lines(spark, args.ena_paths)
     if args.idmapping_parquet:
         idmapping = read_idmapping_parquet(spark, args.idmapping_parquet)
     else:
         url, options = jdbc_url_from_ini(args.db_config, args.db_name)
         idmapping = read_idmapping_jdbc(spark, url, args.db_table, **options)
 
-    result = build_all(lines, idmapping)
+    result = build_all(members, idmapping)
     if args.rejects_dir:
-        # the table and both dead-letter channels read one parsed frame
-        # (a row per record and per CDS block): parse once for the
-        # three writes
+        # the table and the dead-letter channels read one parsed frame
+        # (a row per record, per CDS block and per bad member): parse
+        # once for the four writes
         result.segmented.persist()
     try:
         write_ena_tab(
@@ -154,6 +156,7 @@ def main(argv: list[str] | None = None) -> None:
             for name, df in [
                 ("records", result.rejected_records),
                 ("blocks", result.rejected_blocks),
+                ("files", result.rejected_files),
             ]:
                 df.write.mode("overwrite").option("sep", "\t").option(
                     "header", "false"

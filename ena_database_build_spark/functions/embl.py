@@ -35,23 +35,7 @@ def _nullif_empty(c: Column) -> Column:
     return F.when(c == "", F.lit(None)).otherwise(c)
 
 
-# --- F2: line-family prefix filter (parse_embl.py:488-489) -----------------
-
-def is_interesting_line(line: Column) -> Column:
-    """Keep only ``FT   `` / ``ID   `` / ``OC   `` lines — the cheap
-    pre-filter that runs before any regex (predicate-pushdown analog)."""
-    return (
-        line.startswith("FT   ")
-        | line.startswith("ID   ")
-        | line.startswith("OC   ")
-    )
-
-
 # --- P1 + F4/F5: ID-line parsing with permissive-skip ----------------------
-
-def is_id_line(line: Column) -> Column:
-    return line.startswith("ID   ")
-
 
 def parse_id_line(line: Column) -> Column:
     """P1 -> STRUCT<ena_id STRING, chr_struct INT, chr_len LONG>.

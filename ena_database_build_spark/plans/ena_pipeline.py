@@ -3,12 +3,12 @@
 Reference semantics (ena_build/parse_embl.py:444-570 +
 mysql_database.py:50-134) re-expressed Spark-first:
 
-    embl_lines ─ F2 prefix filter ─ coalesce ─ per-file parse (mapInArrow)
+    member listing ─ coalesce ─ per-file open + gunzip + parse (mapInArrow)
                                         │
         ┌─ records (P1, F3-F6)          ├─ cds blocks: P5-P8, F7, G4
         │                               │   ordinals, A3/A4 spans, A1 sets
-        └─ rejected_records             ├─ rejected_blocks
-                                        │
+        ├─ rejected_records             ├─ rejected_blocks
+        └─ rejected_files (bad gzip)    │
                  explode protein_ids ⋈ idmapping (J1) ─ A-collect
                                         │
                  J3 fallback-coalesce ─ O1 explode ─ O2 project → ena_tab
@@ -53,6 +53,7 @@ class EnaBuildResult:
     ena_tab: DataFrame
     rejected_records: DataFrame
     rejected_blocks: DataFrame
+    rejected_files: DataFrame
 
 
 def _loci(blocks: DataFrame) -> DataFrame:
@@ -154,7 +155,8 @@ def build_all(embl_lines: DataFrame, idmapping: DataFrame) -> EnaBuildResult:
     """The whole lineage, parsed once: ``ena_tab`` and the dead-letter
     channels (SURVEY.md §4.3: the reference print-and-skips malformed
     rows; we surface them as filterable DataFrames instead) all read the
-    same records and blocks.
+    same parse: records, CDS blocks and the members whose gzip stream is
+    cut or corrupt.
 
     ``ena_tab`` grain: one row per (locus, resolved uniprot id list
     element); duplicates across overlapping input files are preserved
@@ -170,7 +172,12 @@ def build_all(embl_lines: DataFrame, idmapping: DataFrame) -> EnaBuildResult:
     rejected_blocks = blocks.where(F.col("reject_reason").isNotNull()).select(
         "file", "record_idx", "block_idx", "reject_reason"
     )
-    return EnaBuildResult(segmented, ena_tab, rejected_records, rejected_blocks)
+    rejected_files = segmented.where(F.col("record_idx").isNull()).select(
+        "file", "reject_reason"
+    )
+    return EnaBuildResult(
+        segmented, ena_tab, rejected_records, rejected_blocks, rejected_files
+    )
 
 
 def build_ena_tab(embl_lines: DataFrame, idmapping: DataFrame) -> DataFrame:

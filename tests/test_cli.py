@@ -44,12 +44,23 @@ def _read_tsv_rows(out_dir: Path):
     return sorted(rows)
 
 
+def _read_lines(out_dir: Path):
+    lines = []
+    for part in sorted(Path(out_dir).glob("part-*")):
+        lines += [ln for ln in part.read_text().splitlines() if ln.strip()]
+    return lines
+
+
 def test_cli_end_to_end(spark, corpus, idmapping_parquet, tmp_path):
     out = tmp_path / "ena_out"
     rejects = tmp_path / "rejects"
+    cut = tmp_path / "cut" / "wgs" / "public" / "cut" / "CUT01.dat.gz"
+    cut.parent.mkdir(parents=True)
+    data = gzip.compress(FILES["wgs/public/abz/ABZA01.dat.gz"].encode())
+    cut.write_bytes(data[: len(data) // 2])
     cli.main(
         [
-            "--ena-paths", str(corpus),
+            "--ena-paths", str(corpus), str(tmp_path / "cut"),
             "--output-dir", str(out),
             "--idmapping-parquet", idmapping_parquet,
             "--rejects-dir", str(rejects),
@@ -58,20 +69,16 @@ def test_cli_end_to_end(spark, corpus, idmapping_parquet, tmp_path):
         ]
     )
     assert _read_tsv_rows(out) == sorted(EXPECTED_ENA_TAB)
-    reject_lines = []
-    for part in sorted((rejects / "records").glob("part-*")):
-        reject_lines += [
-            ln for ln in part.read_text().splitlines() if ln.strip()
-        ]
-    reasons = sorted(ln.split("\t")[-1] for ln in reject_lines)
+    reasons = sorted(ln.split("\t")[-1] for ln in _read_lines(rejects / "records"))
     assert "ill_formatted_id" in reasons
     assert "unknown_topology" in reasons
     assert "non_fungi_eukaryote" in reasons
+    assert _read_lines(rejects / "files") == [f"file://{cut}\ttruncated_gzip"]
 
 
 @pytest.mark.parametrize("rejects", [False, True])
 def test_cli_releases_its_cache(spark, corpus, idmapping_parquet, tmp_path, rejects):
-    """With --rejects-dir the three writes share a persisted line table;
+    """With --rejects-dir the four writes share a persisted parse;
     cli.main must release it, and without dead letters cache nothing."""
     persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs())  # noqa: E731
     # an equal plan cached by an earlier test would absorb a new persist

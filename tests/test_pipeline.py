@@ -4,6 +4,7 @@ compared against the golden output of the *reference* implementation
 tests/tools/gen_golden.py)."""
 
 import gzip
+import random
 import re
 from collections import Counter
 from pathlib import Path
@@ -55,7 +56,21 @@ def _rows(df):
     )
 
 
-def test_build_ena_tab_matches_reference_golden(spark, corpus, idmapping_df):
+@pytest.fixture(scope="module")
+def spaced_corpus(tmp_path_factory):
+    """FILES under a directory whose name needs URL-encoding: ``file``
+    URIs print the space as ``%20`` and the literal ``%20`` as ``%2520``,
+    and the parse must open the member at its decoded path."""
+    root = tmp_path_factory.mktemp("ena_spaced") / "a b%20c"
+    _write(root, FILES)
+    return root
+
+
+def test_build_ena_tab_matches_reference_golden(
+    spark, corpus, spaced_corpus, idmapping_df
+):
+    spaced = read_embl_lines(spark, str(spaced_corpus))
+    assert _rows(P.build_ena_tab(spaced, idmapping_df)) == sorted(EXPECTED_ENA_TAB)
     lines = read_embl_lines(spark, str(corpus))
     tab = P.build_ena_tab(lines, idmapping_df).select(P.ENA_TAB_COLUMNS)
     assert _rows(tab) == sorted(EXPECTED_ENA_TAB)
@@ -184,21 +199,6 @@ def copies(tmp_path_factory):
     return root
 
 
-def test_line_no_orders_each_files_lines(spark, copies):
-    """Sorted by ``line_no``, each file's lines are its own gunzipped
-    lines, also when the scan packs several files into one partition."""
-    lines = read_embl_lines(spark, str(copies))
-    by_file = {}
-    for r in lines.collect():
-        by_file.setdefault(r["file"], []).append((r["line_no"], r["line"]))
-    assert len(by_file) == COPIES * (len(FILES) - 1)
-    assert lines.rdd.getNumPartitions() < len(by_file)
-    for file, rows in by_file.items():
-        with gzip.open(file.removeprefix("file://"), "rt") as f:
-            want = f.read().splitlines()
-        assert [line for _, line in sorted(rows)] == want, file
-
-
 def test_universal_newlines(spark, tmp_path, idmapping_df):
     """CRLF and bare CR end lines as LF does, as in the reference's
     text-mode gzip.open."""
@@ -231,9 +231,10 @@ def _dead_letters(df, root):
 
 
 def test_parse_over_many_files_and_batches(spark, copies, idmapping_df):
-    """More scan partitions than cores, and Arrow batches far smaller
-    than a file, so file boundaries fall inside and across batches:
-    every channel still equals the golden once per copy."""
+    """More listing partitions than cores, coalesced into fewer Python
+    tasks, and listing batches of 7 members, so a task parses many
+    members that reach it over several Arrow batches: every channel
+    still equals the golden once per copy."""
     lines = read_embl_lines(spark, str(copies))
     assert lines.rdd.getNumPartitions() > spark.sparkContext.defaultParallelism
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -254,9 +255,10 @@ def test_parse_over_many_files_and_batches(spark, copies, idmapping_df):
 
 
 def test_ena_tab_plan_is_one_python_pass(spark, copies, idmapping_df):
-    """No Window, one text scan, one Python map, and the stage that
-    reads the files (and runs the pass) has at most defaultParallelism
-    tasks although the scan has more partitions."""
+    """No Window, one ``binaryFile`` listing that reads no member
+    content (empty ``ReadSchema``), one Python map, and no stage of the
+    build runs more than defaultParallelism tasks, although the listing
+    has more partitions: the stage that runs the pass is coalesced."""
     sc = spark.sparkContext
     lines = read_embl_lines(spark, str(copies))
     assert lines.rdd.getNumPartitions() > sc.defaultParallelism
@@ -273,21 +275,18 @@ def test_ena_tab_plan_is_one_python_pass(spark, copies, idmapping_df):
     ]
     assert not [n for n in names if "Window" in n], names
     scans = list(_file_scans(tab._jdf.queryExecution().executedPlan()))
-    assert len(scans) == 1 and "FileScan text" in scans[0].toString()
+    assert len(scans) == 1
+    scan = scans[0].toString()
+    assert "FileScan binaryFile" in scan and "ReadSchema: struct<>" in scan, scan
     assert names.count("MapInArrowExec") == 1, names
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
-    stage_ids = {
-        sid
+    tasks = [
+        store.lastStageAttempt(sid).numTasks()
         for j in tracker.getJobIdsForGroup(group)
         for sid in tracker.getJobInfo(j).stageIds
-    }
-    reading = [
-        store.lastStageAttempt(sid).numTasks()
-        for sid in stage_ids
-        if store.lastStageAttempt(sid).inputBytes() > 0
+        if store.lastStageAttempt(sid).status().toString() != "SKIPPED"
     ]
-    assert len(reading) == 1
-    assert reading[0] <= sc.defaultParallelism
+    assert tasks and max(tasks) <= sc.defaultParallelism, tasks
 
 
 def _overflow_build(spark, tmp_path, text, idmapping_df):
@@ -339,3 +338,120 @@ def test_range_beyond_int64_rejects_the_block(spark, tmp_path, idmapping_df):
     assert tab == [("RNG0001", "X1", 2, 0, 1, 10, 20)]
     assert records == []
     assert blocks == [(1, 1, "cds_location_out_of_range")]
+
+
+def _channels(res):
+    """Multisets of every output channel, full rows with ``file``."""
+    return {
+        name: Counter(map(tuple, getattr(res, name).collect()))
+        for name in (
+            "ena_tab", "rejected_records", "rejected_blocks", "rejected_files"
+        )
+    }
+
+
+GOOD_MEMBER = "wgs/public/abz/ABZA01.dat.gz"
+
+
+@pytest.fixture(scope="module")
+def bad_members(tmp_path_factory):
+    """A gzip member cut in half and a ``.dat.gz`` that is not gzip, both
+    holding records that would reach ``ena_tab`` if they leaked."""
+    root = tmp_path_factory.mktemp("ena_bad")
+    text = FILES[GOOD_MEMBER].encode()
+    data = gzip.compress(text)
+    cut = root / "wgs/public/cut/CUT01.dat.gz"
+    junk = root / "wgs/public/junk/JUNK01.dat.gz"
+    for path, body in ((cut, data[: len(data) // 2]), (junk, text)):
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_bytes(body)
+    return root
+
+
+def test_bad_members_become_dead_letters(spark, tmp_path, bad_members, idmapping_df):
+    """A cut member and a non-gzip member each give one ``rejected_files``
+    row and nothing else; the intact files' output is the golden."""
+    _write(tmp_path / "good", FILES)
+    res = P.build_all(
+        read_embl_lines(spark, [str(tmp_path / "good"), str(bad_members)]),
+        idmapping_df,
+    )
+    assert _rows(res.ena_tab) == sorted(EXPECTED_ENA_TAB)
+    assert _dead_letters(res.rejected_records, tmp_path) == Counter(REJECTED_RECORDS)
+    assert _dead_letters(res.rejected_blocks, tmp_path) == Counter(REJECTED_BLOCKS)
+    files = sorted(
+        (r["file"].removeprefix(f"file://{bad_members}/"), r["reject_reason"])
+        for r in res.rejected_files.collect()
+    )
+    assert files == [
+        ("wgs/public/cut/CUT01.dat.gz", "truncated_gzip"),
+        ("wgs/public/junk/JUNK01.dat.gz", "corrupt_gzip"),
+    ]
+    for name, rows in _channels(res).items():
+        if name != "rejected_files":
+            bad = [r for r in rows if str(bad_members) in r[0]]
+            assert not bad, (name, bad)
+
+
+def test_undecodable_bytes_are_replaced(spark, tmp_path, idmapping_df):
+    """An invalid UTF-8 byte inside an ``FT`` qualifier line, or in a
+    line the parse skips, changes no output."""
+    edge = "wgs/public/edg/EDGE01.dat.gz"
+    members = {rel: text.encode() for rel, text in FILES.items()}
+    members[GOOD_MEMBER] = members[GOOD_MEMBER].replace(
+        b'/translation="MLK"', b'/transl\xffation="MLK"'
+    )
+    members[edge] = members[edge].replace(
+        b"OC   Bacteria; lineage.\n", b"OC   Bacteria; lineage.\nDE   caf\xe9\n", 1
+    )
+    for rel, data in members.items():
+        p = tmp_path / "c" / rel
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_bytes(gzip.compress(data))
+    res = P.build_all(read_embl_lines(spark, str(tmp_path)), idmapping_df)
+    assert _rows(res.ena_tab) == sorted(EXPECTED_ENA_TAB)
+    assert _dead_letters(res.rejected_records, tmp_path) == Counter(REJECTED_RECORDS)
+    assert res.rejected_files.count() == 0
+
+
+def test_output_ignores_member_order_and_partitioning(
+    spark, tmp_path, bad_members, idmapping_df
+):
+    """Listing the members one by one in a shuffled order, with one
+    listing partition per member, changes no channel."""
+    _write(tmp_path, FILES)
+    roots = [str(tmp_path), str(bad_members)]
+    members = [str(p) for root in (tmp_path, bad_members)
+               for p in root.rglob("*.dat.gz")]
+    random.Random(7).shuffle(members)
+    want = _channels(P.build_all(read_embl_lines(spark, roots), idmapping_df))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        lines = read_embl_lines(spark, members)
+        assert lines.rdd.getNumPartitions() == len(members) - 1  # F1 drops one
+        got = _channels(P.build_all(lines, idmapping_df))
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+    assert len(want["rejected_files"]) == 2
+
+
+def test_output_of_a_union_is_the_sum_of_its_halves(spark, copies, idmapping_df):
+    """output(A ∪ B) = output(A) ⊎ output(B) for disjoint member sets."""
+    dirs = [str(copies / f"copy{k:02d}") for k in range(COPIES)]
+
+    def out(roots):
+        return _channels(P.build_all(read_embl_lines(spark, roots), idmapping_df))
+
+    half_a, half_b = out(dirs[::2]), out(dirs[1::2])
+    both = out(dirs)
+    assert both == {name: half_a[name] + half_b[name] for name in both}
+    assert sum(both["ena_tab"].values()) == COPIES * len(EXPECTED_ENA_TAB)
+
+
+@pytest.mark.parametrize("root", ["hdfs://nn/ena", "s3a://bucket/ena"])
+def test_only_local_roots_are_read(spark, root):
+    with pytest.raises(ValueError, match="local path"):
+        read_embl_lines(spark, ["/tmp", root])

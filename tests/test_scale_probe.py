@@ -4,12 +4,11 @@ The record mix of ``tools/soak_probe.py`` is written twice: as one
 ``.dat.gz`` member (size via $SPARK_GRAFT_SCALE_PROBE_RECORDS, default
 20k records: 143k lines, 6.2 MB of text, 0.56 MB gzip'd) and as many
 small members.  Both layouts must give the same ``ena_tab`` once
-``file`` is dropped, so the large member's lines reach the parser whole
-and in order.  The line order rests on each member being one read
-split, which is pinned with a split size below the member's size.  The
-memory half of the contract is structural: each row is one line, never
-a member-sized value, which is the bounded-executor-memory argument at
-256 MB+ members; run the soak tool for a full-size check.
+``file`` is dropped.  Each member is one unit of work, also with a
+split size below the member's size.  The memory half of the contract is
+structural: the parse streams a member's lines and holds one record at
+a time, which is the bounded-executor-memory argument at 256 MB+
+members; run the soak tool for a full-size check.
 """
 
 import os
@@ -17,7 +16,6 @@ import sys
 from pathlib import Path
 
 import pytest
-from pyspark.sql import functions as F
 
 from ena_database_build_spark.plans import ena_pipeline as P
 from ena_database_build_spark.sources.embl import read_embl_lines
@@ -67,8 +65,9 @@ def test_large_member_matches_small_files(spark, big_corpus, small_corpus):
 
 
 def test_large_member_is_one_split(spark, big_corpus):
-    """gzip cannot be split, so a member larger than the split size is
-    still one scan partition (``line_no`` relies on it)."""
+    """A member larger than the split size is still one listing
+    partition, so the member is one unit of work that a single Python
+    task opens and parses whole (``binaryFile`` never splits a file)."""
     (member,) = big_corpus.rglob("*.dat.gz")
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key)
@@ -78,13 +77,3 @@ def test_large_member_is_one_split(spark, big_corpus):
         assert lines.rdd.getNumPartitions() == 1
     finally:
         spark.conf.set(key, old)
-
-
-def test_lines_mode_rows_are_lines_not_blobs(spark, big_corpus):
-    df = read_embl_lines(spark, str(big_corpus))
-    stats = df.agg(
-        F.max(F.length("line")).alias("max_len"), F.count("*").alias("n")
-    ).collect()[0]
-    # bounded row width is the memory contract of line ingest
-    assert stats["max_len"] < 10_000
-    assert stats["n"] > N_RECORDS * 5

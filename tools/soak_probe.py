@@ -4,8 +4,9 @@ Generates ONE pathologically large gzipped EMBL member (default 400k
 records: 2.9M lines, ~125 MB of text, 11 MB gzip'd), runs the pipeline on
 it, and reports the output rows, the wall time and the peak RSS (VmHWM)
 of the JVM and of the Python workers that run the per-file parse.
-Ingest streams the member one row per line and the parse holds one
-record at a time, so no row or buffer is member-sized; the peak RSS
+One Python worker decodes the member's gzip stream to its end, then
+streams its lines through the parse, which holds one record at a time,
+so no row or buffer is member-sized; the peak RSS
 shows that the executor memory stays bounded on members far larger
 than the "relatively small" files the reference assumes (reference
 README.md:48).  ``tests/test_scale_probe.py`` pins
