@@ -9,7 +9,9 @@ mysql_database.py:50-134) re-expressed Spark-first:
         │                               │   ordinals, A3/A4 spans, A1 sets
         ├─ rejected_records             ├─ rejected_blocks
         └─ rejected_files (bad gzip)    │
-                 explode protein_ids ⋈ idmapping (J1) ─ A-collect
+          explode protein_ids ⋈ idmapping as read (J1)
+                                        │
+           locus regroup: set of matched (foreign_id, uniprot_id) pairs
                                         │
                  J3 fallback-coalesce ─ O1 explode ─ O2 project → ena_tab
 
@@ -30,7 +32,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ena_database_build_spark.operators import segmentation as S
-from ena_database_build_spark.sources.idmapping import normalize_idmapping
 
 ENA_TAB_COLUMNS = [
     "ena_id",
@@ -92,20 +93,22 @@ def resolve_uniprot_ids(loci: DataFrame, idmapping: DataFrame) -> DataFrame:
     """J1 + J2 + J3: reverse-map protein ids, falling back to parsed ids.
 
     * J1 — explode the per-locus ``protein_ids`` set and left-join the
-      deduplicated idmapping on ``foreign_id`` (replaces the per-record
+      idmapping as read on ``foreign_id`` (replaces the per-record
       ``IN (...)`` round-trip, mysql_database.py:92-93).  The planner
       and AQE pick broadcast or shuffle join from the mapping's size.
+      The table is never deduplicated as a whole: like the reference's
+      ``{foreign_id -> set(uniprot_id)}`` fold (mysql_database.py:123-127),
+      the locus regroup keeps each matched (foreign_id, uniprot_id) pair
+      once, so only the pairs a build matches are deduplicated.
     * J2 — the anti-join/no-match bookkeeping vanishes: unmatched ids
       simply produce no join rows (the reference's ``not in no_match``
       check is provably redundant — SURVEY.md §2.6 J2).
     * J3 — a locus whose protein ids found *any* mapping uses exactly the
-      mapped ids (duplicates across protein ids preserved, the reference
-      emits one row per list element — parse_embl.py:236-255); otherwise
-      it falls back to its parsed ``uniprot_ids``; loci with neither emit
-      nothing.
+      mapped ids (one uniprot id reached from two protein ids is kept
+      twice, the reference emits one row per list element —
+      parse_embl.py:236-255); otherwise it falls back to its parsed
+      ``uniprot_ids``; loci with neither emit nothing.
     """
-    mapping = normalize_idmapping(idmapping)
-
     locus_key = ["file", "record_idx", "locus_num"]
     other_cols = [c for c in loci.columns if c not in locus_key]
 
@@ -117,15 +120,20 @@ def resolve_uniprot_ids(loci: DataFrame, idmapping: DataFrame) -> DataFrame:
         *loci.columns, F.explode_outer("protein_ids").alias("foreign_id")
     )
     joined = exploded.join(
-        mapping.withColumnRenamed("uniprot_id", "_mapped_id"), "foreign_id", "left"
+        idmapping.withColumnRenamed("uniprot_id", "_mapped_id"), "foreign_id", "left"
     )
     # any_value, not first: every exploded row of a locus carries
     # identical non-key values, so ANY value is the right one — encode
     # that invariant structurally instead of leaning on first()'s
     # row-order-dependent determinism surviving future refactors.
+    # The matched pairs are a set (collect_set skips the NULL of an
+    # unmatched id); their `_mapped_id` field is the locus's id list.
+    matched = F.when(
+        F.col("_mapped_id").isNotNull(), F.struct("foreign_id", "_mapped_id")
+    )
     regrouped = joined.groupBy(*locus_key).agg(
         *[F.any_value(c).alias(c) for c in other_cols],
-        F.collect_list("_mapped_id").alias("mapped_uniprot_ids"),
+        F.collect_set(matched).getField("_mapped_id").alias("mapped_uniprot_ids"),
     )
     resolved = regrouped.withColumn(
         "resolved_uniprot_ids",

@@ -13,18 +13,24 @@ with both sides hash-partitioned on ``foreign_id`` — or a broadcast if a
 division-filtered subset fits (ena ids per run are a small slice).  The
 planner and AQE make that choice from the relation's size: a mapping
 under ``spark.sql.autoBroadcastJoinThreshold`` is broadcast, a larger
-one is shuffle-joined.
+one is shuffle-joined.  The table is joined as read, never deduplicated
+or aggregated as a whole: duplicate pairs collapse in the pipeline's
+per-locus regroup, among the few pairs a build matches
+(``plans/ena_pipeline.py`` ``resolve_uniprot_ids``), so a build pays one
+scan and one shuffle of the mapping, not a full-table aggregation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def read_idmapping_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet-registered idmapping: ``foreign_id STRING, uniprot_id STRING``."""
-    return spark.read.parquet(path).select("foreign_id", "uniprot_id")
+    """Parquet-registered idmapping, read with the declared schema
+    ``foreign_id STRING, uniprot_id STRING``: the columns are found by
+    name, any other column of the files is not read, and no job runs to
+    infer the schema from the files' footers."""
+    return spark.read.schema("foreign_id STRING, uniprot_id STRING").parquet(path)
 
 
 def read_idmapping_jdbc(
@@ -60,9 +66,3 @@ def read_idmapping_jdbc(
         reader = reader.option(k, v)
     return reader.load().select("foreign_id", "uniprot_id")
 
-
-def normalize_idmapping(idmapping: DataFrame) -> DataFrame:
-    """Distinct (foreign_id, uniprot_id) pairs — the reference folds DB
-    rows into ``{foreign_id -> set(uniprot_id)}`` (mysql_database.py:123-127),
-    so duplicate pairs in the table collapse before the join."""
-    return idmapping.dropDuplicates(["foreign_id", "uniprot_id"])

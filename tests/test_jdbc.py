@@ -9,10 +9,7 @@ reference's serial cursor cannot do (mysql_database.py:50-134).
 
 import pytest
 
-from ena_database_build_spark.sources.idmapping import (
-    normalize_idmapping,
-    read_idmapping_jdbc,
-)
+from ena_database_build_spark.sources.idmapping import read_idmapping_jdbc
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -57,12 +54,6 @@ def test_jdbc_partitioned_range_scan(spark, jdbc_url):
     )
     assert back.rdd.getNumPartitions() == 4
     assert back.count() == len(ROWS)
-
-
-def test_jdbc_normalize_dedups(spark, jdbc_url):
-    raw = read_idmapping_jdbc(spark, jdbc_url, "idmapping", driver=DERBY_DRIVER)
-    doubled = raw.unionAll(raw)
-    assert normalize_idmapping(doubled).count() == len(ROWS)
 
 
 @pytest.mark.skip(

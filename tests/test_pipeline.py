@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ena_database_build_spark.operators import segmentation as S
 from ena_database_build_spark.plans import ena_pipeline as P
 from ena_database_build_spark.sources.embl import read_embl_lines
+from ena_database_build_spark.sources.idmapping import read_idmapping_parquet
 from ena_database_build_spark.sources.sinks import write_ena_tab
 from tests.fixtures.embl_fixtures import EXPECTED_ENA_TAB, FILES, IDMAPPING
 
@@ -85,6 +86,16 @@ def test_build_ena_tab_matches_reference_golden(
     ), plan
 
 
+def test_duplicate_mapping_pairs_map_once(spark, corpus, idmapping_df):
+    """Every pair of the mapping listed twice: the reference folds the
+    rows it fetches into ``{foreign_id -> set(uniprot_id)}``, so the output
+    is still the golden, where one uniprot id reached from two protein ids
+    of a locus (AAA1.1 and AAA2.1 -> X1) gives two rows."""
+    doubled = idmapping_df.unionAll(idmapping_df)
+    tab = P.build_ena_tab(read_embl_lines(spark, str(corpus)), doubled)
+    assert _rows(tab) == sorted(EXPECTED_ENA_TAB)
+
+
 def test_build_all_builds_each_stage_once(monkeypatch, spark, corpus, idmapping_df):
     """ena_tab and both dead-letter channels share one segmentation and
     one records/blocks extraction."""
@@ -123,6 +134,53 @@ def _file_scans(node):
     for n in _plan_nodes(node):
         if n.getClass().getSimpleName() == "FileSourceScanExec":
             yield n
+
+
+def _path_to_scan(node, fmt):
+    """Node names from an executed (adaptive) plan's root down to its
+    ``fmt`` file scan; empty if it has none."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _path_to_scan(node.executedPlan(), fmt)
+    if name.endswith("QueryStageExec"):
+        return _path_to_scan(node.plan(), fmt)
+    if name == "FileSourceScanExec" and f"FileScan {fmt}" in node.toString():
+        return [name]
+    children = node.children()
+    for i in range(children.size()):
+        path = _path_to_scan(children.apply(i), fmt)
+        if path:
+            return [name, *path]
+    return []
+
+
+def test_shuffle_join_reads_the_mapping_as_is(spark, corpus, tmp_path):
+    """A mapping above the broadcast threshold, as perfbench's 400k-row
+    one: a sort-merge join over the parquet idmapping as read. No
+    aggregate sits between the mapping's scan and its exchange, and the
+    build shuffles three times: both join sides and the locus regroup."""
+    path = str(tmp_path / "idmapping.parquet")
+    spark.createDataFrame(
+        IDMAPPING, "foreign_id string, uniprot_id string"
+    ).write.parquet(path)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        lines = read_embl_lines(spark, str(corpus))
+        tab = P.build_ena_tab(lines, read_idmapping_parquet(spark, path))
+        tab = tab.select(P.ENA_TAB_COLUMNS)
+        assert _rows(tab) == sorted(EXPECTED_ENA_TAB)
+    finally:
+        spark.conf.set(key, old)
+    plan = tab._jdf.queryExecution().executedPlan()
+    names = [n.getClass().getSimpleName() for n in _plan_nodes(plan)]
+    assert names.count("SortMergeJoinExec") == 1, names
+    assert "BroadcastExchangeExec" not in names, names
+    assert names.count("ShuffleExchangeExec") == 3, names
+    path = _path_to_scan(plan, "parquet")
+    below = path[len(path) - 1 - path[::-1].index("ShuffleExchangeExec"):]
+    assert not [n for n in below if "Aggregate" in n], below
 
 
 def test_dropped_division_files_are_never_opened(spark, corpus):
